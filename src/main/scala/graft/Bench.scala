@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 object Bench {
 
@@ -77,39 +78,7 @@ object Bench {
 
   // ---------------------------------------------------------------- child
 
-  /** One resolution of the core count, shared by the query session, the
-    * embedded scan section AND the forked ScanBench child (r12 ADVICE: the
-    * fork path inherited ScanBench.main's own default of 32 while the
-    * SPARK_GRAFT_BENCH_FORK=0 embedded path ran ScanBench.run at Bench's
-    * default of 4 — with the env var unset the two modes measured 8× apart
-    * in parallelism, making scan numbers non-comparable across modes).
-    * The driver always sets SPARK_GRAFT_CPUS explicitly, so committed
-    * artifacts are unaffected; this pins local/dev runs to one config.
-    */
-  private def resolvedCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-
-
-  private def newSession(): SparkSession = {
-    val cpus = resolvedCpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // allow shuffled-hash joins where the per-partition build side fits
-      // (guide §3.1/§9): sort-merge pays two sorts the hash join skips;
-      // scale-independent planner guidance, overridable via env for A/B
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64m"))
-      // events.parquet has TIMESTAMP(NANOS); read as nano longs (exact).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  private def cpus: Int = GraftSession.defaultCpus
 
   /** Per-query best-of-2 (same policy as ScanBench): round-level contention
     * inflates single-shot numbers, never deflates them — r2's q37 tripled
@@ -134,13 +103,13 @@ object Bench {
       // warm run warms the JVM, not the data.
       spark.catalog.clearCache()
       if (name.startsWith("q5")) operators.ReadstatQueries.clearCache()
-      // NonFatal only (r13 ADVICE): swallowing an OutOfMemoryError here
+      // NonFatal only: swallowing an OutOfMemoryError here
       // would let a heap-damaged JVM keep emitting timed numbers that look
       // like clean measurements; and a query that only fails on first
       // execution must leave a trace in the window's provenance, so the
       // failure is logged rather than silently discarded.
       try fn(spark, sfDir).count() catch {
-        case scala.util.control.NonFatal(e) => System.err.println(
+        case NonFatal(e) => System.err.println(
           s"[bench] warm run of $name failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
       }
       def oneRun(): (Double, Boolean) = {
@@ -153,7 +122,7 @@ object Bench {
         // both runs pay the full write+read cost
         if (name.startsWith("q5")) operators.ReadstatQueries.clearCache()
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+        val ok = try { fn(spark, sfDir).count(); true } catch { case NonFatal(_) => false }
         ((System.nanoTime() - t0) / 1e9, ok)
       }
       val two = Seq(oneRun(), oneRun())
@@ -178,17 +147,17 @@ object Bench {
     val calPre = calibrate()
     val calParPre = calibratePar()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = newSession()
+    val spark = GraftSession()
     // warmup: absorb JVM/codegen/scan-cache startup so per-query numbers
     // measure the queries, not the first query's JIT
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
+    try SparkEntry.entry(spark).count() catch { case NonFatal(_) => }
     // ~17 GB sustained scan throughput (BASELINE.md ≥100 MB/s/core bar);
     // measured BEFORE the query suite so the scan numbers see a fresh heap
     // rather than 50 queries' tenured garbage; disable with
     // SPARK_GRAFT_BIGSCAN=0
     val scan =
       if (sys.env.get("SPARK_GRAFT_BIGSCAN").contains("0")) Map.empty[String, Double]
-      else try ScanBench.run(spark, resolvedCpus.toInt) catch { case _: Throwable => Map.empty[String, Double] }
+      else try ScanBench.run(spark, cpus) catch { case NonFatal(_) => Map.empty[String, Double] }
     val selected =
       if (args.nonEmpty) SparkEntry.queries.keys.toSeq.filter(args.contains)
       else SparkEntry.queries.keys.toSeq
@@ -236,7 +205,7 @@ object Bench {
     // captured tail always carries the total, the query count and the
     // failure count alongside the skew/calibration evidence.
     val nFailed = sorted.count(_._2 < 0)
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$qruns,"max_run_skew":${f"$maxSkew%.2f"},"max_run_skew_all":${f"$maxSkewAll%.2f"},$calKeys,"scan":$scanJson,"sf":"$sfDir","cpus":$resolvedCpus,"n_queries":${sorted.size},"n_failed":$nFailed,"total_sec":${f"$total%.3f"}}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$qruns,"max_run_skew":${f"$maxSkew%.2f"},"max_run_skew_all":${f"$maxSkewAll%.2f"},$calKeys,"scan":$scanJson,"sf":"$sfDir","cpus":$cpus,"n_queries":${sorted.size},"n_failed":$nFailed,"total_sec":${f"$total%.3f"}}"""
   }
 
   /** Persist the full line to a file: BENCH_r04's captured stdout was
@@ -259,8 +228,8 @@ object Bench {
     // 8-core run judged against 32-core bests flags half the suite). The
     // canonical driver config (sf0.1, 32 cores) keeps the historical
     // plain name; anything else lands in a config-suffixed side file.
-    val out = if (sfName == "sf0.1" && resolvedCpus == "32") "BENCH_LOCAL.json"
-              else if (sfName == "sf0.1") s"BENCH_LOCAL_c$resolvedCpus.json"
+    val out = if (sfName == "sf0.1" && cpus == 32) "BENCH_LOCAL.json"
+              else if (sfName == "sf0.1") s"BENCH_LOCAL_c$cpus.json"
               else s"BENCH_LOCAL_$sfName.json"
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(out),
@@ -368,7 +337,7 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
     val groups = names.grouped(groupSize).toSeq
     val childEnv = Map("SPARK_GRAFT_BIGSCAN" -> "0",
-      "SPARK_GRAFT_CPUS" -> resolvedCpus)
+      "SPARK_GRAFT_CPUS" -> cpus.toString)
 
     // the scan section keeps its own fresh JVM (it always wanted one: the
     // r4 verdict's Bench-embedded scans inherited the query suite's heap);
@@ -376,7 +345,7 @@ object Bench {
     val scanJson =
       if (sys.env.get("SPARK_GRAFT_BIGSCAN").contains("0")) "{}"
       else forkJson("graft.ScanBench", Nil,
-        Map("SPARK_GRAFT_CPUS" -> resolvedCpus)).getOrElse {
+        Map("SPARK_GRAFT_CPUS" -> cpus.toString)).getOrElse {
         System.err.println("[bench] scan child failed — scan section empty")
         "{}"
       }
@@ -514,8 +483,8 @@ object Bench {
     // the artifact never loses coverage to a flaky child
     if (failed.nonEmpty) {
       System.err.println(s"[bench] in-process fallback for ${failed.size} queries")
-      val spark = newSession()
-      try SparkEntry.entry(spark).count() catch { case _: Throwable => }
+      val spark = GraftSession()
+      try SparkEntry.entry(spark).count() catch { case NonFatal(_) => }
       results ++= runGroup(spark, sfDir, failed.toSeq)
       spark.stop()
     }
@@ -538,8 +507,8 @@ object Bench {
       // the next 32-core window would have judged itself against 8-core
       // bests (everything "fast", nothing flagged)
       val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-      val ref = if (sfName == "sf0.1" && resolvedCpus == "32") "BENCH_LOCAL.json"
-                else if (sfName == "sf0.1") s"BENCH_LOCAL_c$resolvedCpus.json"
+      val ref = if (sfName == "sf0.1" && cpus == 32) "BENCH_LOCAL.json"
+                else if (sfName == "sf0.1") s"BENCH_LOCAL_c$cpus.json"
                 else s"BENCH_LOCAL_$sfName.json"
       val p = java.nio.file.Paths.get(ref)
       if (!java.nio.file.Files.exists(p)) Map.empty

@@ -234,37 +234,31 @@ object ScaleSmoke {
   private val domWallFloor = 5.0
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.defaultCpus
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_SMOKE_DOCS", "50000").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // 4 reducer waves per core (r16): at shuffle.partitions = cores,
-      // every exchange-fed stage is ONE wave of long tasks — max_task ≈
-      // wall however even the work is, which is the shape the dominance
-      // gate exists to catch when it's STRUCTURAL. A real deployment runs
-      // many more reducers than cores (the brief's own sizing advice);
-      // the smoke emulates many-split SCANS via the 1 MB split config
-      // below, and this is the same emulation for the shuffle side. The
-      // bench keeps the driver-contract 32 — it measures sf0.1 latency,
-      // not scale shape.
-      .config("spark.sql.shuffle.partitions", cpus.toInt * 4)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the 10× corpus is still only ~25 MB of parquet — at default split
-      // sizing Spark packs it into ONE input task, serializing the
-      // corpus-sized signature/shingle stages. A real 100 TB corpus has
-      // thousands of splits; emulate that shape so the smoke measures the
-      // operators' task spread, not small-file packing.
-      .config("spark.sql.files.maxPartitionBytes", (1L << 20).toString)
-      .config("spark.sql.files.openCostInBytes", (64 << 10).toString)
-      // likewise AQE's 64 MB advisory size would coalesce every shuffle of
-      // this corpus into ONE partition — a small-data artifact, not the
-      // 100 TB shape the smoke is probing
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (1L << 20).toString)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", (256 << 10).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(cpus)
+    // 4 reducer waves per core: at shuffle.partitions = cores,
+    // every exchange-fed stage is ONE wave of long tasks — max_task ≈
+    // wall however even the work is, which is the shape the dominance
+    // gate exists to catch when it's STRUCTURAL. A real deployment runs
+    // many more reducers than cores (the brief's own sizing advice);
+    // the smoke emulates many-split SCANS via the 1 MB split config
+    // below, and this is the same emulation for the shuffle side. The
+    // bench keeps shuffle.partitions = cores — it measures sf0.1
+    // latency, not scale shape.
+    spark.conf.set("spark.sql.shuffle.partitions", cpus * 4L)
+    // the 10× corpus is still only ~25 MB of parquet — at default split
+    // sizing Spark packs it into ONE input task, serializing the
+    // corpus-sized signature/shingle stages. A real 100 TB corpus has
+    // thousands of splits; emulate that shape so the smoke measures the
+    // operators' task spread, not small-file packing.
+    spark.conf.set("spark.sql.files.maxPartitionBytes", 1L << 20)
+    spark.conf.set("spark.sql.files.openCostInBytes", 64L << 10)
+    // likewise AQE's 64 MB advisory size would coalesce every shuffle of
+    // this corpus into ONE partition — a small-data artifact, not the
+    // 100 TB shape the smoke is probing
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", 1L << 20)
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", 256L << 10)
 
     val nSkewDocs = sys.env.getOrElse("SPARK_GRAFT_SKEW_DOCS", "10000").toInt
 

@@ -2,6 +2,8 @@ package graft
 
 import java.io.File
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.functions._
@@ -33,16 +35,11 @@ object ScanBench {
     * inherit the query suite's heap state and machine contention).
     */
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.defaultCpus
+    val spark = GraftSession(cpus)
     // optional section filter (`runMain graft.ScanBench media`): bisect one
     // section's throughput without paying the 1 GB scan generations
-    val out = run(spark, cpus.toInt, only = args.toSet)
+    val out = run(spark, cpus, only = args.toSet)
     println(out.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + f"$v%.2f" }
       .mkString("{", ",", "}"))
@@ -106,7 +103,7 @@ object ScanBench {
     // failure
     def section(name: String)(body: => Unit): Unit =
       if (wanted(name)) try body catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           System.err.println(s"[scanbench] $name section failed: ${e.getMessage}")
           out(s"${name}_error") = 1.0
       }

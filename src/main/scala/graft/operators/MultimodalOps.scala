@@ -733,7 +733,7 @@ object MultimodalOps {
     // with AQE off the same plan shows ReusedExchange). The cache is
     // corpus-linear (doc_id + 64-bit hash) and released after the pair
     // frame materializes — UNLESS the caller already persisted it
-    // (kindWaterfallLazy's survivors, PairProbe): persist on an
+    // (kindWaterfallLazy's survivors): persist on an
     // already-cached plan is a no-op, but the release here would drop the
     // CALLER's cache out from under its later joins (r16 ADVICE medium —
     // q125's rep/assembly joins recomputed the digest-election chain).

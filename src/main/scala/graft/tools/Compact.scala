@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.readstat.Compaction
 
 /** Sink-directory maintenance: `runMain graft.tools.Compact <dir>
@@ -22,13 +20,7 @@ object Compact {
     }
     val keep = flag("--keep", 1L).toInt
     val targetBytes = flag("--target-mb", 128L) << 20
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-compact")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession()
     try {
       Compaction.compact(spark, args(0), keep, targetBytes) match {
         case Some(r) => println(s"[compact] folded ${r.foldedEpochs} epochs + " +

@@ -25,13 +25,7 @@ object Convert {
     require(args.length >= 2,
       "usage: Convert <inputDirOrFile> <outputParquetDir> [--strict]")
     val strict = args.contains("--strict")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-convert")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession()
     try {
       val n = convert(spark, args(0), args(1), strict)
       println(s"[convert] wrote $n rows: ${args(0)} -> ${args(1)}" +

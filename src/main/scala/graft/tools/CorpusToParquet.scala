@@ -2,8 +2,6 @@ package graft.tools
 
 import java.io.File
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps every corpus `.sas7bdat`/`.dta` through the DSv2 source to parquet
   * (raw codes, no value-label decode) so an INDEPENDENT parser (pandas
   * read_sas / read_stata, driver-side python) can cross-check our decoded
@@ -12,12 +10,7 @@ import org.apache.spark.sql.SparkSession
 object CorpusToParquet {
   def main(args: Array[String]): Unit = {
     val outDir = if (args.nonEmpty) args(0) else "/tmp/corpus_parquet"
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     val files = CorpusCheck.corpusFiles().filter { f =>
       val n = f.getName.toLowerCase
       n.endsWith(".sas7bdat") || n.endsWith(".dta")

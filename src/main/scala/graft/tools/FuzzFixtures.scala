@@ -4,7 +4,7 @@ import java.io.File
 
 import scala.util.Random
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 import graft.sources.readstat.sas.SasFixtureWriter
@@ -52,12 +52,7 @@ object FuzzFixtures {
     val filesDir = new File(outRoot, "files")
     val pqDir = new File(outRoot, "parquet")
     filesDir.mkdirs(); pqDir.mkdirs()
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     import scala.jdk.CollectionConverters._
 
     for (seed <- 1 to 4; fmt <- Seq("dta", "sas")) {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{IvfPqIndexStore, SimilarityOps}
@@ -36,14 +35,7 @@ object IndexAdmin {
       val i = args.indexOf(name)
       if (i >= 0 && i + 1 < args.length) args(i + 1).toDouble else dflt
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-index-admin")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     /** the corpus in the audit/rebuild shape (the fixture embeddings
       * schema; production lakes point this at their vector table) */

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain("formatted")` for the headline queries to `PLANS.md` — a
   * committed artifact so plan-level claims (pushdown, broadcasts, codegen
   * spans, no BNLJ/cartesian) are auditable without running anything.
@@ -49,13 +47,8 @@ object PlanDump {
     "q145_ivfpq_refined_search")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // 4 cores pin the partition counts the committed plans print
+    val spark = graft.GraftSession(cpus = 4)
     val d = "/root/testdata/sf0.001"
     val sb = new StringBuilder
     sb.append("# Headline query plans (formatted explain, sf0.001, local[4])\n\n")

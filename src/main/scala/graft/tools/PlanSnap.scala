@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Snapshot `explain("formatted")` for named queries into
   * `<repo>/plans/<tag>/<query>_<suffix>.txt` — the per-round optimization
   * evidence files (deliverable: plans/r17/<query>_before.txt /
@@ -33,17 +31,8 @@ object PlanSnap {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanSnap <tag> <suffix> <query...>")
     val (tag, suffix, names) = (args(0), args(1), args.drop(2).toSeq)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // mirror Bench.newSession's join-planner guidance (r17) so committed
-      // plans show the join strategies the bench actually times
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // 4 cores pin the partition counts the committed plans print
+    val spark = graft.GraftSession(cpus = 4)
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val dir = repoRoot.resolve(s"plans/$tag")
     java.nio.file.Files.createDirectories(dir)

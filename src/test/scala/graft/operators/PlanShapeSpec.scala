@@ -1,13 +1,19 @@
 package graft.operators
 
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
 import graft.SparkSpec
 
 /** Plan-shape guards for the claims the scaladocs make: map-only operators
   * must not shuffle (their only exchange is the cosmetic output sort's
   * range partitioning), top-k must be TakeOrdered (per-partition heaps),
-  * and the grouped aggregate must shuffle exactly once.
+  * and the grouped aggregate must shuffle exactly once. The relational
+  * cases pin what the README claims Catalyst does for the TPC-H shapes:
+  * partial aggregation, parquet filter and column pushdown, broadcast
+  * dimension joins, and readstat column pruning.
   */
-class PlanShapeSpec extends SparkSpec {
+class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val d = "/root/testdata/sf0.001"
 
@@ -16,6 +22,52 @@ class PlanShapeSpec extends SparkSpec {
 
   private def hashExchanges(p: String): Int =
     "Exchange hashpartitioning".r.findAllIn(p).length
+
+  private def lines(p: String, marker: String): Seq[String] =
+    p.linesIterator.filter(_.contains(marker)).toSeq
+
+  test("q01 aggregates partially before its exchange") {
+    val p = plan("q01_agg_pricing")
+    assert(lines(p, "HashAggregate").exists(_.contains("partial_sum(")),
+      s"q01 lost its map-side partial aggregation:\n${p.take(1600)}")
+  }
+
+  test("q02 pushes its filters and projection into the parquet scan") {
+    val p = graft.SparkEntry.queries("q02_filter_project")(spark, d).queryExecution.executedPlan
+    val scans = collect(p) { case f: FileSourceScanExec => f }
+    assert(scans.size === 1, s"q02 expected one parquet scan:\n$p")
+    val pushed = scans.head.metadata("PushedFilters")
+    assert(pushed.contains("GreaterThan(l_discount,") &&
+        pushed.contains("GreaterThanOrEqual(l_shipdate,"),
+      s"q02's predicates are not pushed into the scan: $pushed")
+    assert(scans.head.requiredSchema.fieldNames.toSet === Set("l_orderkey", "l_linenumber",
+        "l_quantity", "l_extendedprice", "l_discount", "l_shipdate"),
+      s"q02's ReadSchema is not pruned: ${scans.head.requiredSchema.simpleString}")
+  }
+
+  test("q06 broadcasts the part dimension instead of shuffling lineitem for it") {
+    val p = plan("q06_broadcast_join")
+    assert(p.contains("BroadcastHashJoin"), s"q06 lost its broadcast join:\n${p.take(1600)}")
+  }
+
+  test("q09 top-k is TakeOrdered, not a global sort") {
+    val p = plan("q09_sort_topk")
+    assert(p.contains("TakeOrderedAndProject"), s"q09 lost TakeOrdered:\n${p.take(800)}")
+  }
+
+  test("a readstat select prunes the BatchScan to the selected column") {
+    val path = java.nio.file.Files.createTempDirectory("graft_prune")
+      .resolve("nation.dta").toString
+    graft.sources.readstat.stata.DtaWriter.write(
+      spark.read.parquet(s"$d/nation.parquet")
+        .selectExpr("CAST(n_nationkey AS double) k", "n_name"), path)
+    val p = spark.read.format("readstat").load(path).select("n_name")
+      .queryExecution.executedPlan.toString
+    val scan = lines(p, "BatchScan")
+    assert(scan.nonEmpty, s"no readstat BatchScan in:\n$p")
+    assert(scan.forall(_.contains("cols=n_name ")),
+      s"the readstat scan still reads unselected columns:\n${scan.mkString("\n")}")
+  }
 
   test("map-only text/sampling operators have no exchange at all") {
     // r9 swept the cosmetic corpus-sized output sorts, so these are now
