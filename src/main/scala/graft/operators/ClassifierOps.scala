@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Cached
 
 /** In-engine quality-classifier TRAINING over hashed bag-of-words features
   * (r10 verdict #5 — q81's missing half).
@@ -42,11 +43,9 @@ object ClassifierOps {
     */
   def hashedFeatures(docs: DataFrame): DataFrame =
     docs
-      // NOT widened (r17 adjudication): the entry widen + eager cache
-      // fills measured ×1.27–1.44 on q97/q102/q131 in a clean A/B window —
-      // the racing recomputes they remove run on idle cores at sf0.1,
-      // while the exchange + fill barriers are pure added wall. See
-      // OPTIMIZATION_r17.md "what was tried and reverted".
+      // Not widened, and the callers' feature caches not filled: the
+      // racing recomputes run on idle cores, while the exchange + fill
+      // barriers are added wall (OPTIMIZATION_r17.md).
       .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
       .filter(col("t") =!= "")
       .select(col("doc_id"),
@@ -58,26 +57,21 @@ object ClassifierOps {
     * the feature table persists once; weights are a ≤65,536-row aggregate
     * broadcast back; two linear shuffles total.
     */
-  def trainQualityEpoch1(docs: DataFrame): DataFrame = {
+  def trainQualityEpoch1(docs: DataFrame): DataFrame = Cached { c =>
     val labeled = docs.select(col("doc_id"),
       when(TextOps.gopherKeepCol(col("text")), 1L).otherwise(0L).as("y"))
-    val feats = hashedFeatures(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val feats = c.hold(hashedFeatures(docs))
     val w1 = feats.join(labeled, "doc_id")
       .groupBy("bucket")
       .agg(sum((col("y") * 2 - 1) * col("c")).as("w1"))
     val scores = feats.join(broadcast(w1), "bucket")
       .groupBy("doc_id")
       .agg(sum(col("c") * col("w1")).as("score1"))
-    val res = labeled
+    labeled
       .join(scores, Seq("doc_id"), "left")
       .select(col("doc_id"), col("y"),
         coalesce(col("score1"), lit(0L)).as("score1"))
       .withColumn("pred_keep", (col("score1") > 0).cast("long"))
-    val out = res.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    feats.unpersist(blocking = false)
-    out
   }
 
   /** Full logistic-regression training: `epochs` passes of batch gradient
@@ -95,14 +89,12 @@ object ClassifierOps {
       feats: DataFrame,
       labels: DataFrame,
       epochs: Int,
-      lr: Double): DataFrame = {
+      lr: Double): DataFrame = Cached.scope { c =>
     val sp = feats.sparkSession
     import sp.implicits._
-    val fj = feats.join(labels, "doc_id")
+    val fj = c.hold(feats.join(labels, "doc_id")
       .select(col("doc_id"), col("bucket"), col("c").cast("double").as("c"),
-        col("y").cast("double").as("y"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    fj.count()
+        col("y").cast("double").as("y")), fill = true)
     var w: Map[Long, Double] = Map.empty
     for (_ <- 0 until epochs) {
       val wdf = broadcast(
@@ -122,9 +114,7 @@ object ClassifierOps {
         acc.updated(b, acc.getOrElse(b, 0.0) - lr * gm(b))
       }
     }
-    fj.unpersist(blocking = false)
-    val out = w.toSeq.toDF("bucket", "w")
-    out
+    w.toSeq.toDF("bucket", "w")
   }
 
   /** q81's serving plumbing with a TRAINED weight table instead of the
@@ -144,6 +134,15 @@ object ClassifierOps {
     * engine-exact device, distinct salt): 80% train / 20% eval.
     */
   private val aucTrainBound = "cccccccc" // 0.8 * 2^32
+
+  /** (doc_id, y, is_train): q102/q131's Gopher-gate labels on the 80/20
+    * md5 split.
+    */
+  private def heldOutSplit(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      when(TextOps.gopherKeepCol(col("text")), 1L).otherwise(0L).as("y"),
+      (substring(md5(concat(lit("auc:"), col("doc_id").cast("string"))), 1, 8)
+        < aucTrainBound).as("is_train"))
 
   /** q102: held-out ranking quality (AUC) of the classifier — the eval
     * metric that closes the train (q97) / serve (q81) loop. Train the
@@ -173,15 +172,10 @@ object ClassifierOps {
     * at that scale bucket scores into fixed-width bins first (the same
     * histogram, doubles in the final division only).
     */
-  def aucEval(docs: DataFrame): DataFrame = {
+  def aucEval(docs: DataFrame): DataFrame = Cached { c =>
     import org.apache.spark.sql.expressions.Window
-    val split = docs.select(col("doc_id"),
-      when(TextOps.gopherKeepCol(col("text")), 1L).otherwise(0L).as("y"),
-      (substring(md5(concat(lit("auc:"), col("doc_id").cast("string"))), 1, 8)
-        < aucTrainBound).as("is_train"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val feats = hashedFeatures(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val split = c.hold(heldOutSplit(docs))
+    val feats = c.hold(hashedFeatures(docs))
     val w1 = feats
       .join(split.filter(col("is_train")).select("doc_id", "y"), "doc_id")
       .groupBy("bucket")
@@ -194,9 +188,8 @@ object ClassifierOps {
     val ev = split.filter(!col("is_train"))
       .join(scores, Seq("doc_id"), "left")
       .select(col("y"), coalesce(col("s"), lit(0L)).as("s"))
-    val hist = ev.groupBy("s")
-      .agg(sum(col("y")).as("pos"), sum(lit(1L) - col("y")).as("neg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val hist = c.hold(ev.groupBy("s")
+      .agg(sum(col("y")).as("pos"), sum(lit(1L) - col("y")).as("neg")))
     // two-pass prefix sum (see scaladoc): order-preserving fixed-width
     // ranges over [min, max], driver-side exclusive prefix of the
     // per-range negative totals (≤ nRanges longs), broadcast join back,
@@ -218,7 +211,7 @@ object ClassifierOps {
     val prefixDf = prefixRows.toSeq.toDF("r", "range_cnb")
     val withinRange = Window.partitionBy("r").orderBy("s")
       .rowsBetween(Window.unboundedPreceding, -1)
-    val res = withR
+    withR
       .withColumn("wcnb", coalesce(sum("neg").over(withinRange), lit(0L)))
       .join(broadcast(prefixDf), "r")
       .withColumn("cnb", col("range_cnb") + col("wcnb"))
@@ -229,12 +222,6 @@ object ClassifierOps {
         col("n_pos"), col("n_neg"), col("u2"),
         (expr("(2 * u2 * 1000000 + nullif(2 * n_pos * n_neg, 0)) div " +
           "(2 * nullif(2 * n_pos * n_neg, 0))") / lit(1000000.0)).as("auc"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    res.count() // force before releasing the inputs (the q97 discipline)
-    hist.unpersist(blocking = false)
-    feats.unpersist(blocking = false)
-    split.unpersist(blocking = false)
-    res
   }
 
   /** q131: CALIBRATION bins (reliability diagram) of the held-out
@@ -254,14 +241,9 @@ object ClassifierOps {
     * ≤nBins-key exchange. The eval split is sample-bounded by design at
     * scale (q111's truth-side argument).
     */
-  def calibrationBins(docs: DataFrame, nBins: Int = 10): DataFrame = {
-    val split = docs.select(col("doc_id"),
-      when(TextOps.gopherKeepCol(col("text")), 1L).otherwise(0L).as("y"),
-      (substring(md5(concat(lit("auc:"), col("doc_id").cast("string"))), 1, 8)
-        < aucTrainBound).as("is_train"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val feats = hashedFeatures(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def calibrationBins(docs: DataFrame, nBins: Int = 10): DataFrame = Cached { c =>
+    val split = c.hold(heldOutSplit(docs))
+    val feats = c.hold(hashedFeatures(docs))
     val w1 = feats
       .join(split.filter(col("is_train")).select("doc_id", "y"), "doc_id")
       .groupBy("bucket")
@@ -275,7 +257,7 @@ object ClassifierOps {
       .join(scores, Seq("doc_id"), "left")
       .select(col("y"), coalesce(col("s"), lit(0L)).as("s"))
     val mm = ev.agg(min("s").as("lo"), max("s").as("hi"))
-    val res = ev.crossJoin(broadcast(mm))
+    ev.crossJoin(broadcast(mm))
       .withColumn("bin", expr(s"CAST((s - lo) * $nBins DIV (hi - lo + 1) AS BIGINT)"))
       .groupBy("bin")
       .agg(count(lit(1)).as("n"), sum("y").as("n_pos"), sum("s").as("sum_s"))
@@ -283,11 +265,6 @@ object ClassifierOps {
         round(col("n_pos").cast("double") / col("n"), 6).as("frac_pos"),
         round(col("sum_s").cast("double") / col("n"), 6).as("mean_score"))
       .orderBy("bin")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    res.count() // force before releasing the inputs (the q97 discipline)
-    feats.unpersist(blocking = false)
-    split.unpersist(blocking = false)
-    res
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Cached
 import graft.util.Tables._
 
 /** Deduplication operators over `documents` (SURVEY.md §7.1 M6 / the
@@ -22,33 +23,6 @@ import graft.util.Tables._
 object DedupOps {
 
   private val nHashes = 8 // 4 bands × 2 rows
-
-  /** Eager finish for operators that persist corpus-sized intermediates:
-    * materialize `out` (persisted; output-sized by construction) and then
-    * unpersist the upstream caches deterministically instead of leaving
-    * corpus-sized blocks to the ContextCleaner (ADVICE r5). The extra
-    * count() is free in net terms — the caller's first action reads the
-    * cached result instead of recomputing the chain.
-    *
-    * Cache contract: the RETURNED frame is persisted (it is output-sized by
-    * construction — candidate pairs, never the corpus) and the caller owns
-    * it — `result.unpersist()` when done with it. The returned Dataset's own
-    * logical plan IS the cached plan — persisting a sub-plan and stacking an
-    * operator on top would make the caller's `unpersist()` a silent
-    * plan-mismatch no-op in the CacheManager. For that reason (and for cost:
-    * materializing a global sort pays a RangePartitioning sampling pass over
-    * the whole chain) the pair queries return UNORDERED sets — they are
-    * full-set operators, not top-k, and the correctness comparator is
-    * row-sorted; a consumer needing order sorts the output-sized result.
-    * No corpus-sized block outlives the operator call (CacheReleaseSpec pins
-    * both properties via `getPersistentRDDs`).
-    */
-  private[operators] def finishAndRelease(out: DataFrame, upstream: DataFrame*): DataFrame = {
-    val o = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    o.count()
-    upstream.foreach(_.unpersist(false))
-    o
-  }
 
   /** q34 stop-shingle bound: shingles in more than this many documents are
     * dropped before the self-join (they are corpus boilerplate and make the
@@ -81,14 +55,9 @@ object DedupOps {
                            element_at($tCol, i + 1), element_at($tCol, i + 2)))
           ELSE CAST(array() AS ARRAY<STRING>) END"""
 
-  /** NOT widened (r17 adjudication): an entry widen + eager banded fill
-    * was tried for the whole LSH/Jaccard family and REGRESSED the q35
-    * family ×1.3–1.6 in a clean A/B window (q35 0.97→1.56, q40 1.79→2.81,
-    * q45 1.34→1.77) — at sf0.1 the racing single-task recomputes of the
-    * signature chain run on otherwise-idle cores (wall-hidden), while the
-    * widen exchange + fill barrier are pure added wall. The single
-    * heavy-front operators that DID win kept their widens (q71/q75/q90/
-    * q110); see OPTIMIZATION_r17.md "what was tried and reverted".
+  /** Not widened: the racing recomputes of the signature chain run on
+    * idle cores, while a widen exchange + fill barrier are added wall
+    * (the measured trade is in OPTIMIZATION_r17.md).
     */
   private def withShingleArray(docs: DataFrame): DataFrame =
     docs
@@ -139,34 +108,26 @@ object DedupOps {
     * self-joined into per-pair intersection counts with both docs' shingle
     * set sizes attached — the scoring (symmetric Jaccard vs directional
     * containment) is the only thing the two operators do differently.
-    * Returns (pairs, guardedShingles); the guarded table persists because
-    * it feeds three consumers (counts + both join sides) — the CALLER must
-    * hand it to [[finishAndRelease]]. See the q34 entry comment for the
-    * df-guard rationale and the measured r8 alternative.
+    * The guarded table is cached in the caller's scope `c`: it feeds three
+    * consumers (counts + both join sides). See the q34 entry comment for
+    * the df-guard rationale and the measured alternative.
     */
-  private def guardedPairCounts(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+  private def guardedPairCounts(c: Cached.Scope, s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sh = shingles(s, d)
+    // filled: the three consumers start together in the first job, and
+    // each would otherwise re-run the window sort+filter over the cache
+    val sh = c.hold(shingles(s, d)
       .withColumn("df", count(lit(1)).over(Window.partitionBy("s")))
       .filter(col("df") <= maxShingleDf)
-      .drop("df")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager fill (r17): three consumers (counts + both self-join sides)
-    // launch concurrently inside the first job over `pairs`, and scans of
-    // an UNFILLED cache race — each re-executes the window sort+filter
-    // above the (reused) shuffle instead of waiting (StageProf on q34: the
-    // window chain's task time appeared 2-3x). One count() fills the cache
-    // once; the consumers then read it.
-    sh.count()
+      .drop("df"), fill = true)
     val counts = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val inter = sh.as("a")
       .join(sh.as("b"), col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .agg(count(lit(1)).as("inter"))
-    val pairs = inter
+    inter
       .join(counts.select(col("doc_id").as("id_a"), col("n").as("na")), "id_a")
       .join(counts.select(col("doc_id").as("id_b"), col("n").as("nb")), "id_b")
-    (pairs, sh)
   }
 
   /** doc_id, g — per-document DISTINCT word-5-grams (the decontamination
@@ -215,8 +176,8 @@ object DedupOps {
     * which shuffled the gram table three more times and measured ~2× the
     * wall time at sf0.1). The order-nondeterminism of collect_set is
     * immaterial: pair generation and counts are set-order-invariant.
-    * Output (source-pair rows) persists under the [[finishAndRelease]]
-    * contract.
+    * Output (source-pair rows) is persisted and caller-owned
+    * ([[graft.util.Cached]]).
     */
   def sourceOverlap(docs: DataFrame): DataFrame = {
     // widened at entry (r17, guide §2.5): the gram explode + collect_set
@@ -247,7 +208,7 @@ object DedupOps {
       .select(col("src_a"), col("src_b"), col("n_common"),
         (expr("(2 * n_common * 1000000 + u) div (2 * u)") / lit(1000000.0))
           .as("jaccard"))
-    finishAndRelease(res)
+    Cached(_ => res)
   }
 
   /** q79's operator body over any (doc_id, text) frame: per-document
@@ -327,7 +288,7 @@ object DedupOps {
         col("span_tokens"))
       .orderBy(desc("span_tokens"), col("doc_id"), col("edoc"),
         col("start_pos"), col("eval_pos"))
-    finishAndRelease(res)
+    Cached(_ => res)
   }
 
   /** q80's operator body: C4-style duplicate-span REMOVAL — the removal
@@ -615,13 +576,11 @@ object DedupOps {
     // anti-join re-traverses the cache once per consumer. The window's
     // single shuffle + spillable sort + one cached guarded table is the
     // measured winner.
-    "q34_ngram_jaccard" -> ((s, d) => {
-      val (pairs, sh) = guardedPairCounts(s, d)
-      val res = pairs
+    "q34_ngram_jaccard" -> ((s, d) => Cached { c =>
+      guardedPairCounts(c, s, d)
         .withColumn("jacc", col("inter") / (col("na") + col("nb") - col("inter")))
         .filter(col("jacc") >= 0.3)
         .select(col("id_a"), col("id_b"), round(col("jacc"), 4).as("jacc"))
-      finishAndRelease(res, sh)
     }),
 
     // Shingle CONTAINMENT pairs (Broder '97's asymmetric resemblance
@@ -640,8 +599,7 @@ object DedupOps {
     // q71's shared-window hits — window hashing catches exactly the
     // substring overlap containment scores — with this operator's exact
     // math as the verify stage over those candidates.
-    "q93_containment" -> ((s, d) => {
-      val (pairs, sh) = guardedPairCounts(s, d)
+    "q93_containment" -> ((s, d) => Cached { c =>
       // containment is a ratio of two INTEGERS, so its 4-decimal rounding
       // uses the exact half-up device ((2a+b) div (2b), the q69/q79
       // discipline) instead of round(double, 4) — an odd intersection
@@ -649,14 +607,13 @@ object DedupOps {
       // exactly where engine round(double) implementations disagree. The
       // ≥0.8 threshold is integer too (5·inter ≥ 4·n can never tie-break
       // differently across engines).
-      val res = pairs
+      guardedPairCounts(c, s, d)
         .filter(col("inter") * 5 >= least(col("na"), col("nb")) * 4)
         .select(col("id_a"), col("id_b"),
           (expr("(2 * inter * 10000 + na) div (2 * na)") / lit(10000.0))
             .as("cont_a"),
           (expr("(2 * inter * 10000 + nb) div (2 * nb)") / lit(10000.0))
             .as("cont_b"))
-      finishAndRelease(res, sh)
     }),
 
     // Containment VERIFIED over shared-window candidates — the 100 TB
@@ -683,29 +640,28 @@ object DedupOps {
     // shared by k docs fans out k² candidate pairs (the q40/q71 skew
     // contract: hot boilerplate's pair OUTPUT is inherently quadratic —
     // run q80's span removal first on boilerplate-heavy corpora).
-    "q95_containment_verified" -> ((s, d) => {
+    "q95_containment_verified" -> ((s, d) => Cached { c =>
       val docs = documents(s, d)
-      val wins = windowHashes(docs, 20)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // materialize candidates, then RELEASE the corpus-token-sized window
-      // table before the verify stage runs (the q40 release order) — only
-      // the candidate-bounded caches stay resident for the verify join
-      val cand = finishAndRelease(
+      // candidates materialize in their own scope, which releases the
+      // corpus-token-sized window table before the verify stage runs
+      // (the q40 release order) — only the candidate-bounded caches stay
+      // resident for the verify join
+      val cand = c.adopt(Cached { cw =>
+        val wins = cw.hold(windowHashes(docs, 20))
         wins.as("a")
           .join(wins.as("b"),
             col("a.wh") === col("b.wh") && col("a.doc_id") < col("b.doc_id"))
           .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-          .distinct(),
-        wins)
+          .distinct()
+      })
       val ids = cand.select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
         .distinct()
-      val sharr = withShingleArray(docs.join(broadcast(ids), "doc_id"))
-        .select(col("doc_id"), array_distinct(col("sh")).as("sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sharr.count() // eager fill: both verify-join sides race an unfilled cache (r17)
+      // filled: both verify-join sides would race an unfilled cache
+      val sharr = c.hold(withShingleArray(docs.join(broadcast(ids), "doc_id"))
+        .select(col("doc_id"), array_distinct(col("sh")).as("sh")), fill = true)
       // the exact half-up integer device for the 4-decimal containments
       // and the integer threshold — see the q93 entry comment
-      val res = cand
+      cand
         .join(sharr.select(col("doc_id").as("id_a"), col("sh").as("sa")), "id_a")
         .join(sharr.select(col("doc_id").as("id_b"), col("sh").as("sb")), "id_b")
         .withColumn("inter", size(array_intersect(col("sa"), col("sb"))).cast("long"))
@@ -717,7 +673,6 @@ object DedupOps {
             .as("cont_a"),
           (expr("(2 * inter * 10000 + nb) div (2 * nb)") / lit(10000.0))
             .as("cont_b"))
-      finishAndRelease(res, cand, sharr)
     }),
 
     // MinHash + LSH: 8 minhash lanes → 4 bands of 2 → candidate pairs that
@@ -729,9 +684,7 @@ object DedupOps {
     // per-doc lane minima are still computed on the shingle ARRAY with
     // array_min(transform(...)) — no explode, no signature shuffle. min()
     // is duplicate-insensitive, so shingle duplicates need no dedup first.
-    "q35_minhash_lsh" -> ((s, d) => {
-      lshCandidates(documents(s, d))
-    }),
+    "q35_minhash_lsh" -> ((s, d) => lshCandidates(documents(s, d))),
 
     // SimHash (16-bit, md5-nibble-derived) per document + near-dup pairs at
     // hamming distance ≤ 2. bit_count is a builtin in both engines.
@@ -760,13 +713,13 @@ object DedupOps {
     // band candidates (q35's plan) verified with exact n-gram Jaccard
     // (q34's math) — quadratic work only inside LSH buckets, never across
     // the corpus. Fills the q40 numbering gap.
-    "q40_lsh_jaccard_verified" -> ((s, d) => {
-      // Everything candidate-bounded is persisted (r3 verdict #1): `cand`
-      // feeds two consumers (the id set and the verify join) — uncached,
-      // the whole signature chain runs twice; `sharr` feeds both join
-      // sides. The corpus-sized stages run exactly once.
-      // (`lshCandidates` returns its result already persisted+materialized.)
-      val cand = lshCandidates(documents(s, d))
+    "q40_lsh_jaccard_verified" -> ((s, d) => Cached { c =>
+      // Everything candidate-bounded is persisted: `cand` feeds two
+      // consumers (the id set and the verify join) — uncached, the whole
+      // signature chain runs twice; `sharr` feeds both join sides. The
+      // corpus-sized stages run exactly once. (`lshCandidates` returns its
+      // result persisted and filled; this scope adopts it.)
+      val cand = c.adopt(lshCandidates(documents(s, d)))
       // only candidate docs matter for the verify stage: filter DOCUMENTS on
       // the (small) candidate id set BEFORE tokenizing, so the second
       // shingle pass is candidate-sized, not corpus-sized.
@@ -776,17 +729,16 @@ object DedupOps {
       // no exploded shingle table, no counts aggregation, no count joins.
       // Sound at scale because doc length is bounded (arrays are
       // shingle-count-sized) while the corpus is not; the expensive
-      // dimension stays candidate-bounded.
-      val sharr = withShingleArray(documents(s, d).join(broadcast(ids), "doc_id"))
-        .select(col("doc_id"), array_distinct(col("sh")).as("sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sharr.count() // eager fill: both verify-join sides race an unfilled cache (r17)
+      // dimension stays candidate-bounded. Filled: both verify-join sides
+      // would race an unfilled cache.
+      val sharr = c.hold(withShingleArray(documents(s, d).join(broadcast(ids), "doc_id"))
+        .select(col("doc_id"), array_distinct(col("sh")).as("sh")), fill = true)
       // verify-join shape: PLAIN join-backs, deliberately unhinted — the
       // shingle side is candidate-id-bounded and byte-small, so AQE
       // broadcasts it at runtime and the pair stream never exchanges
-      // (see rpLshNearDup's r16 adjudication: hinting shuffle_hash here
-      // forbade that conversion and doubled the skew-corpus wall).
-      val res = cand
+      // (see rpLshNearDup: hinting shuffle_hash here forbade that
+      // conversion and doubled the skew-corpus wall).
+      cand
         .join(sharr.select(col("doc_id").as("id_a"), col("sh").as("sa")), "id_a")
         .join(sharr.select(col("doc_id").as("id_b"), col("sh").as("sb")), "id_b")
         .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
@@ -794,7 +746,6 @@ object DedupOps {
           col("inter") / (size(col("sa")) + size(col("sb")) - col("inter")))
         .filter(col("jacc") >= 0.3)
         .select(col("id_a"), col("id_b"), round(col("jacc"), 4).as("jacc"))
-      finishAndRelease(res, cand, sharr)
     }),
 
     // MinHash similarity ESTIMATION (the third leg of the sketch story:
@@ -805,16 +756,15 @@ object DedupOps {
     // estimator's error is visible in-engine. Everything after the
     // candidate stage is candidate-bounded, like q40; one shingle pass
     // computes BOTH the signature and the distinct-shingle array.
-    "q49_minhash_estimate" -> ((s, d) => {
+    "q49_minhash_estimate" -> ((s, d) => Cached { c =>
       graft.functions.VectorFunctions.register(s)
-      val cand = lshCandidates(documents(s, d))
+      val cand = c.adopt(lshCandidates(documents(s, d)))
       val ids = cand.select(explode(array(col("id_a"), col("id_b"))).as("doc_id")).distinct()
-      val both = withShingleArray(documents(s, d).join(broadcast(ids), "doc_id"))
+      // filled: both verify-join sides would race an unfilled cache
+      val both = c.hold(withShingleArray(documents(s, d).join(broadcast(ids), "doc_id"))
         .select(col("doc_id"), expr("graft_minhash_lanes(sh)").as("lanes"),
-          array_distinct(col("sh")).as("sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      both.count() // eager fill: both verify-join sides race an unfilled cache (r17)
-      val res = cand
+          array_distinct(col("sh")).as("sh")), fill = true)
+      cand
         .join(both.select(col("doc_id").as("id_a"), col("lanes").as("la"), col("sh").as("sa")), "id_a")
         .join(both.select(col("doc_id").as("id_b"), col("lanes").as("lb"), col("sh").as("sb")), "id_b")
         .withColumn("agree", expr("size(filter(zip_with(la, lb, (x, y) -> x = y), b -> b))"))
@@ -822,7 +772,6 @@ object DedupOps {
         .select(col("id_a"), col("id_b"),
           round(col("agree") / 8.0, 4).as("est_jacc"),
           round(col("inter") / (size(col("sa")) + size(col("sb")) - col("inter")), 4).as("jacc"))
-      finishAndRelease(res, cand, both)
     })
   )
 
@@ -844,19 +793,16 @@ object DedupOps {
     *  - `sim` is persisted (4 consumers: distinct values, both cross sides,
     *    both same-value sides); it is (doc_id, simhash) — 16 bytes/row —
     *    and MEMORY_AND_DISK spills. It is corpus-sized, so it is released
-    *    eagerly via `finishAndRelease` once the (output-sized) pair frame is
-    *    materialized; the returned frame follows the caller-owns-cache
-    *    contract documented on `finishAndRelease`.
-    *
-    * `finish = true` (the operator path) runs the single finishAndRelease
-    * layer (output-sized pair frame persisted, `sim`
-    * released). `finish = false` returns the RAW un-persisted pair frame —
-    * for plan-shape inspection in specs (a cached frame's executedPlan
-    * collapses to InMemoryTableScan, hiding the join structure the spec
-    * asserts on) — and leaves `sim` cached for the caller to clear.
+    *    once the (output-sized, caller-owned) pair frame is filled.
     */
-  def simhashPairs(sim0: DataFrame, finish: Boolean = true): DataFrame = {
-    val sim = sim0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def simhashPairs(sim: DataFrame): DataFrame =
+    Cached(c => simhashPairFrame(c.hold(sim)))
+
+  /** [[simhashPairs]]' raw, uncached pair frame — for plan-shape
+    * inspection in specs (a cached frame's executedPlan collapses to
+    * InMemoryTableScan, hiding the join structure).
+    */
+  private[operators] def simhashPairFrame(sim: DataFrame): DataFrame = {
     val vals = sim.select("simhash").distinct() // ≤ 65,536 rows
     // the distance-1/2 Hamming ball: 16 single-bit + 120 two-bit masks
     val masks = (0 until 16).map(1 << _) ++
@@ -880,8 +826,7 @@ object DedupOps {
         col("a.simhash") === col("b.simhash") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
         lit(0L).as("dist"))
-    val out = cross.unionByName(same).select(col("id_a"), col("id_b"), col("dist"))
-    if (finish) finishAndRelease(out, sim) else out
+    cross.unionByName(same).select(col("id_a"), col("id_b"), col("dist"))
   }
 
   /** q74: benchmark decontamination via Bloom prefilter + exact verify —
@@ -905,44 +850,32 @@ object DedupOps {
     * benchmark-sized by contract, never corpus-sized). The corpus side
     * stays lazy and is scanned exactly once, at action time.
     */
-  def bloomDecontam(docs: DataFrame, fpp: Double = 0.001): DataFrame = {
+  def bloomDecontam(docs: DataFrame, fpp: Double = 0.001): DataFrame = Cached { c =>
     require(fpp > 0 && fpp < 1, s"fpp must be in (0,1), got $fpp")
     graft.functions.BloomFunctions.register(docs.sparkSession)
     val grams = wordGrams5(docs)
-    val evalGrams = grams.filter(col("doc_id") < 10).select("g").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the eager sizing/sketch jobs below can throw (executor loss, sketch
-    // OOM) — the persisted eval frame must not outlive the failed call
-    // (same discipline as GraphOps' star-round finally)
-    var handedOff = false
-    try {
-      val corpus = grams.filter(col("doc_id") >= 10)
-      val nEval = evalGrams.count() // exact sketch sizing; materializes cache
-      val res = if (nEval == 0) {
-        // nothing to decontaminate against: the exact join below is empty;
-        // skip the sketch (BloomFilter.create requires > 0 expected items)
-        corpus.join(evalGrams, "g")
-          .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
-      } else {
-        val bloom = evalGrams.stat.bloomFilter("g", nEval, fpp)
-        val bytes = graft.functions.BloomFunctions.serialize(bloom)
-        val pre = corpus.where(
-          call_function("graft_bloom_might_contain", lit(bytes), col("g")))
-        pre.join(evalGrams, "g")
-          .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
-      }
-      val out = finishAndRelease(res, evalGrams)
-      handedOff = true // finishAndRelease released evalGrams on success
-      out
-    } finally {
-      if (!handedOff) evalGrams.unpersist(false)
+    val evalGrams = c.hold(grams.filter(col("doc_id") < 10).select("g").distinct())
+    val corpus = grams.filter(col("doc_id") >= 10)
+    val nEval = evalGrams.count() // exact sketch sizing; fills the cache
+    if (nEval == 0) {
+      // nothing to decontaminate against: the exact join below is empty;
+      // skip the sketch (BloomFilter.create requires > 0 expected items)
+      corpus.join(evalGrams, "g")
+        .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
+    } else {
+      val bloom = evalGrams.stat.bloomFilter("g", nEval, fpp)
+      val bytes = graft.functions.BloomFunctions.serialize(bloom)
+      val pre = corpus.where(
+        call_function("graft_bloom_might_contain", lit(bytes), col("g")))
+      pre.join(evalGrams, "g")
+        .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
     }
   }
 
   /** doc_id, wh — per-document DISTINCT hashed w-token windows, the unit
     * of q71/q75. Row-local (transform + array_distinct before the
     * explode); documents under w tokens contribute no windows. NOT
-    * persisted — callers that fan out persist and release themselves.
+    * persisted — callers that fan out cache it in their own scope.
     */
   private def windowHashes(docs: DataFrame, w: Int): DataFrame = {
     require(w >= 1, s"window must be >= 1 token, got $w")
@@ -972,21 +905,19 @@ object DedupOps {
     * both sides — linear, hash-partitioned on a 32-char key (xxhash64 at
     * 100 TB halves the shuffle width, same plan).
     */
-  def boilerplateFrac(docs: DataFrame, w: Int = 20): DataFrame = {
-    val wins = windowHashes(docs, w)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def boilerplateFrac(docs: DataFrame, w: Int = 20): DataFrame = Cached { c =>
+    val wins = c.hold(windowHashes(docs, w))
     val dfreq = wins.groupBy("wh").agg(count(lit(1)).as("n_docs"))
     val per = wins.join(dfreq, "wh")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_windows"),
         sum(when(col("n_docs") > 1, 1L).otherwise(0L)).as("n_dup_windows"))
-    val res = docs.select("doc_id").join(per, Seq("doc_id"), "left")
+    docs.select("doc_id").join(per, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_windows"), lit(0L)).as("n_windows"),
         coalesce(col("n_dup_windows"), lit(0L)).as("n_dup_windows"),
         round(coalesce(col("n_dup_windows") * lit(1.0) / col("n_windows"),
           lit(0.0)), 4).as("boilerplate_frac"))
-    finishAndRelease(res, wins)
   }
 
   /** q71's operator body, reusable over any (doc_id, text) frame: flag
@@ -1000,21 +931,19 @@ object DedupOps {
     * sequence(0, negative) would generate a DESCENDING range, so the
     * length gate is load-bearing, not cosmetic.
     */
-  def windowDedup(docs: DataFrame, w: Int = 20): DataFrame = {
+  def windowDedup(docs: DataFrame, w: Int = 20): DataFrame = Cached { c =>
     // two consumers (the shared-window aggregate and the join-back probe):
     // persist so the corpus is scanned and window-hashed ONCE — the md5
     // per (token × w) is the operator's dominant row-local cost
-    val wins = windowHashes(docs, w)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val wins = c.hold(windowHashes(docs, w))
     val shared = wins.groupBy("wh").agg(count(lit(1)).as("n_docs"))
       .filter(col("n_docs") > 1)
     val dupCounts = wins.join(shared, "wh")
       .groupBy("doc_id").agg(count(lit(1)).as("n_dup_windows"))
-    val res = docs.select("doc_id").join(dupCounts, Seq("doc_id"), "left")
+    docs.select("doc_id").join(dupCounts, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_dup_windows"), lit(0L)).as("n_dup_windows"),
         (coalesce(col("n_dup_windows"), lit(0L)) > 0).as("flagged"))
-    finishAndRelease(res, wins)
   }
 
   /** MinHash signature → 4 band keys → colliding (id_a, id_b) candidate
@@ -1037,7 +966,7 @@ object DedupOps {
     * from measured lane agreement for the no-knob scale path.
     */
   private[operators] def lshCandidatesAt(docs: DataFrame,
-      bands: Int, rows: Int): DataFrame = {
+      bands: Int, rows: Int): DataFrame = Cached { c =>
     require(bands * rows == nHashes,
       s"bands x rows must factor the $nHashes-lane budget, got $bands x $rows")
     // 8 lanes × 8 hex chars (32 bits each) from one sha256 per shingle,
@@ -1051,24 +980,16 @@ object DedupOps {
       .select(col("doc_id"), expr("graft_minhash_lanes(sh)").as("lanes"))
       .select(Seq(col("doc_id")) ++ (0 until nHashes).map(i =>
         col("lanes")(i).as(s"h$i")): _*)
-    // persisted: the band self-join consumes `banded` on BOTH sides and the
+    // held: the band self-join consumes `banded` on BOTH sides and the
     // union-of-selects defeats Spark's exchange reuse (no ReusedExchange
-    // in the executed plan — r4 verdict #6), so without the cache the whole
-    // corpus-sized shingle+signature chain runs twice. One row per doc
-    // (doc_id + `bands` hashes), MEMORY_AND_DISK spills.
-    val banded = sig.select(
+    // in the executed plan), so without the cache the whole corpus-sized
+    // shingle+signature chain runs twice. One row per doc (doc_id +
+    // `bands` hashes). Not filled: the racing scans re-run the signature
+    // chain on idle cores, which costs less wall than a fill's job barrier
+    // (a measured trade — OPTIMIZATION_r17.md).
+    val banded = c.hold(sig.select(
       col("doc_id") +: (0 until bands).map(i =>
-        md5(concat((0 until rows).map(j => col(s"h${i * rows + j}")): _*)).as(s"b$i")): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // NO eager fill (r17 adjudication): the 2×bands racing scans of the
-    // unfilled cache DO re-execute the signature chain (q49's StageProf:
-    // eight concurrent single-task re-runs), but at sf0.1 those run on
-    // otherwise-idle cores — an explicit count() fill serialized a job
-    // barrier in front of every consumer and measured ×1.3–1.6 on the
-    // q35 family in a clean A/B window. At saturated-cluster scale the
-    // recompute is real CPU waste; the trade is documented in
-    // OPTIMIZATION_r17.md and the cache itself stays (without it the
-    // chain runs per-SIDE even sequentially).
+        md5(concat((0 until rows).map(j => col(s"h${i * rows + j}")): _*)).as(s"b$i")): _*))
     val buckets = (0 until bands).map(i =>
       banded.select(col("doc_id"), lit(i).as("bi"), col(s"b$i").as("bk")))
       .reduce(_.unionByName(_))
@@ -1080,15 +1001,14 @@ object DedupOps {
     // across the whole q35 family at sf0.1 with no robustness win the
     // smoke hadn't already certified. The max-recall PROBE geometry is
     // the exception — see [[lshGeometryAuto]].
-    val cand = buckets.as("a")
+    // returned persisted and filled (candidate-bounded, small); `banded`
+    // (corpus-sized) is released here, not left to the ContextCleaner
+    buckets.as("a")
       .join(buckets.as("b"),
         col("a.bi") === col("b.bi") && col("a.bk") === col("b.bk") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
-    // returned persisted+materialized (candidate-bounded, small); `banded`
-    // (corpus-sized) is released here, not left to the ContextCleaner
-    finishAndRelease(cand, banded)
   }
 
   /** The measured pick of [[lshGeometryAuto]]: the chosen factorization
@@ -1144,35 +1064,35 @@ object DedupOps {
   private[graft] def lshGeometryAuto(docs: DataFrame,
       targetRecall: Double = 0.9): LshGeometry = {
     graft.functions.VectorFunctions.register(docs.sparkSession)
-    val cand = finishAndRelease(probeCandidates(docs))
-    val ids = cand.select(explode(array(col("id_a"), col("id_b"))).as("doc_id")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // guard the broadcast (r13 ADVICE — the deltaDedup bar applied here):
-    // at the max-recall 8×1 probe geometry on a boilerplate-heavy corpus
-    // the candidate-id set approaches CORPUS size, exactly the
-    // pathological-batch shape deltaDedup degrades on. Count against the
-    // same bar and fall back to a shuffle join instead of OOMing the
-    // driver; the degrade is a pure re-plan (same rows, same ĵ).
-    val nIds = ids.count()
-    val joined =
-      if (nIds <= deltaBroadcastMaxIds) docs.join(broadcast(ids), "doc_id")
-      else {
-        System.err.println(s"[graft] lshGeometryAuto: $nIds candidate ids " +
-          s"exceed broadcast bar $deltaBroadcastMaxIds — degrading to a shuffle join")
-        docs.join(ids, "doc_id")
-      }
-    val lanes = withShingleArray(joined)
-      .select(col("doc_id"), expr("graft_minhash_lanes(sh)").as("lanes"))
-    val est = cand
-      .join(lanes.select(col("doc_id").as("id_a"), col("lanes").as("la")), "id_a")
-      .join(lanes.select(col("doc_id").as("id_b"), col("lanes").as("lb")), "id_b")
-      .withColumn("est", expr(
-        s"size(filter(zip_with(la, lb, (x, y) -> x = y), b -> b)) / ${nHashes}.0D"))
-      .filter(col("est") >= 0.3)
-      .agg(round(avg("est"), 6).as("jhat"), count(lit(1)).as("n"))
-      .collect()(0)
-    cand.unpersist(blocking = false)
-    ids.unpersist(blocking = false)
+    val est = Cached.scope { c =>
+      val cand = c.hold(probeCandidates(docs), fill = true)
+      val ids = c.hold(
+        cand.select(explode(array(col("id_a"), col("id_b"))).as("doc_id")).distinct())
+      // guard the broadcast (the deltaDedup bar applied here):
+      // at the max-recall 8×1 probe geometry on a boilerplate-heavy corpus
+      // the candidate-id set approaches CORPUS size, exactly the
+      // pathological-batch shape deltaDedup degrades on. Count against the
+      // same bar and fall back to a shuffle join instead of OOMing the
+      // driver; the degrade is a pure re-plan (same rows, same ĵ).
+      val nIds = ids.count()
+      val joined =
+        if (nIds <= deltaBroadcastMaxIds) docs.join(broadcast(ids), "doc_id")
+        else {
+          System.err.println(s"[graft] lshGeometryAuto: $nIds candidate ids " +
+            s"exceed broadcast bar $deltaBroadcastMaxIds — degrading to a shuffle join")
+          docs.join(ids, "doc_id")
+        }
+      val lanes = withShingleArray(joined)
+        .select(col("doc_id"), expr("graft_minhash_lanes(sh)").as("lanes"))
+      cand
+        .join(lanes.select(col("doc_id").as("id_a"), col("lanes").as("la")), "id_a")
+        .join(lanes.select(col("doc_id").as("id_b"), col("lanes").as("lb")), "id_b")
+        .withColumn("est", expr(
+          s"size(filter(zip_with(la, lb, (x, y) -> x = y), b -> b)) / ${nHashes}.0D"))
+        .filter(col("est") >= 0.3)
+        .agg(round(avg("est"), 6).as("jhat"), count(lit(1)).as("n"))
+        .collect()(0)
+    }
     if (est.getLong(1) == 0L) return LshGeometry(4, 2, 0.0)
     val jhat = est.getDouble(0)
     def capture(b: Int, r: Int): Double = 1.0 - math.pow(1.0 - math.pow(jhat, r), b)
@@ -1218,15 +1138,14 @@ object DedupOps {
     * (q47/q103 provide the deterministic samplers); the per-bucket
     * recall estimate is unbiased under any doc-level sample.
     */
-  def lshRecallAudit(s: SparkSession, d: String): DataFrame = {
-    val (pairs, sh) = guardedPairCounts(s, d)
-    val truth = finishAndRelease(
-      pairs
-        .withColumn("jacc", col("inter") / (col("na") + col("nb") - col("inter")))
-        .filter(col("jacc") >= 0.3)
-        .select(col("id_a"), col("id_b"), col("jacc")),
-      sh)
-    val cand = lshCandidates(documents(s, d))
+  def lshRecallAudit(s: SparkSession, d: String): DataFrame = Cached { c =>
+    // the truth pairs fill in their own scope, which releases the guarded
+    // shingle table before the candidate stage runs
+    val truth = c.adopt(Cached(ct => guardedPairCounts(ct, s, d)
+      .withColumn("jacc", col("inter") / (col("na") + col("nb") - col("inter")))
+      .filter(col("jacc") >= 0.3)
+      .select(col("id_a"), col("id_b"), col("jacc"))))
+    val cand = c.adopt(lshCandidates(documents(s, d)))
     val marked = truth
       .join(cand.withColumn("is_cand", lit(1L)), Seq("id_a", "id_b"), "left")
       .withColumn("hit", coalesce(col("is_cand"), lit(0L)))
@@ -1243,7 +1162,7 @@ object DedupOps {
         coalesce(sum("hit"), lit(0L)).as("n_hits"))
       .crossJoin(broadcast(cand.agg(count(lit(1)).as("n_cand"))))
       .withColumn("bucket", lit("all"))
-    val res = per.select("bucket", "n_truth", "n_hits", "n_cand")
+    per.select("bucket", "n_truth", "n_hits", "n_cand")
       .unionByName(allRow.select("bucket", "n_truth", "n_hits", "n_cand"))
       .withColumn("recall", when(col("n_truth") > 0,
         expr("(2 * n_hits * 10000 + n_truth) div (2 * n_truth)") / lit(10000.0))
@@ -1251,7 +1170,6 @@ object DedupOps {
       .withColumn("precision", when(col("n_cand") > 0,
         expr("(2 * n_hits * 10000 + n_cand) div (2 * n_cand)") / lit(10000.0))
         .otherwise(lit(0.0)))
-    finishAndRelease(res, truth, cand)
   }
 
   /** q115's operator body: SURGICAL decontamination — q67 flags
@@ -1281,23 +1199,22 @@ object DedupOps {
     * eval-bounded. One linear shuffle (the per-doc start set); the
     * corpus never shuffles on gram values. Holds at 100 TB.
     */
-  def decontamScrub(docs: DataFrame): DataFrame = {
+  def decontamScrub(docs: DataFrame): DataFrame = Cached { c =>
     val base = docs.select(col("doc_id"), col("text"))
     val evalGrams = base.filter(col("doc_id") < 10)
       .select(split(col("text"), " ").as("t"))
       .filter(size(col("t")) >= 5)
       .select(explode(array_distinct(expr(gram5ArrayExpr("t")))).as("g"))
       .distinct()
-    val toks = base.filter(col("doc_id") >= 10)
-      .select(col("doc_id"), split(col("text"), " ").as("t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val toks = c.hold(base.filter(col("doc_id") >= 10)
+      .select(col("doc_id"), split(col("text"), " ").as("t")))
     val starts = toks.filter(size(col("t")) >= 5)
       .select(col("doc_id"), posexplode(expr(gram5ArrayExpr("t"))))
       .withColumnRenamed("col", "g")
       .join(broadcast(evalGrams), "g")
       .select(col("doc_id"), (col("pos") + 1).as("i"))
       .groupBy("doc_id").agg(collect_set(col("i")).as("starts"))
-    val res = toks.join(starts, Seq("doc_id"), "left")
+    toks.join(starts, Seq("doc_id"), "left")
       .select(col("doc_id"),
         size(col("t")).cast("long").as("n_tokens"),
         when(col("starts").isNull, col("t")).otherwise(expr(
@@ -1308,7 +1225,6 @@ object DedupOps {
       .select(col("doc_id"), col("n_tokens"),
         size(col("kt")).cast("long").as("n_kept"),
         concat_ws(" ", col("kt")).as("clean_text"))
-    finishAndRelease(res, toks)
   }
 
   /** q118's operator body: INTRA-document repetition scrub — q60 measures
@@ -1335,10 +1251,9 @@ object DedupOps {
     * here, so no df guard is needed) — then the per-doc start set and the
     * row-local reassembly. Corpus-linear throughout; holds at 100 TB.
     */
-  def repetitionScrub(docs: DataFrame): DataFrame = {
+  def repetitionScrub(docs: DataFrame): DataFrame = Cached { c =>
     import org.apache.spark.sql.expressions.Window
-    val toks = docs.select(col("doc_id"), split(col("text"), " ").as("t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val toks = c.hold(docs.select(col("doc_id"), split(col("text"), " ").as("t")))
     val starts = toks.filter(size(col("t")) >= 5)
       .select(col("doc_id"), posexplode(expr(gram5ArrayExpr("t"))))
       .select(col("doc_id"), (col("pos") + 1).as("i"), col("col").as("g"))
@@ -1346,7 +1261,7 @@ object DedupOps {
         min(col("i")).over(Window.partitionBy("doc_id", "g")))
       .filter(col("i") >= col("first_i") + 5)
       .groupBy("doc_id").agg(collect_set(col("i")).as("starts"))
-    val res = toks.join(starts, Seq("doc_id"), "left")
+    toks.join(starts, Seq("doc_id"), "left")
       .select(col("doc_id"),
         size(col("t")).cast("long").as("n_tokens"),
         when(col("starts").isNull, col("t")).otherwise(expr(
@@ -1357,7 +1272,6 @@ object DedupOps {
       .select(col("doc_id"), col("n_tokens"),
         size(col("kt")).cast("long").as("n_kept"),
         concat_ws(" ", col("kt")).as("clean_text"))
-    finishAndRelease(res, toks)
   }
 
   /** q112's operator body: INCREMENTAL (delta) dedup — the daily-dump
@@ -1409,16 +1323,6 @@ object DedupOps {
   def deltaDedup(s: SparkSession, d: String): DataFrame =
     deltaDedupFrom(documents(s, d))
 
-  /** q143's fixture manifest: initialized ONCE per (JVM, corpus) from the
-    * q112 history split (the build-once amortization the q122/q126 index
-    * fixtures use), removed by a shutdown hook. The memo keys on the
-    * corpus CONTENT token, not the path alone (r14 ADVICE): a harness
-    * that regenerates the corpus at the same path within one JVM must get
-    * a fresh manifest, or q143 would serve stale history while q112
-    * recomputes fresh — two queries sharing one oracle text diverging.
-    */
-  private val manifestDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   /** Cheap corpus-identity token: the documents table's file listing
     * folded as (name, length, mtime) — the build-id discipline for
     * corpora that don't carry one. Driver-side fs metadata only. Shared
@@ -1440,20 +1344,18 @@ object DedupOps {
         scala.util.hashing.MurmurHash3.stringHash(sig))
     }
   }
+
+  /** q143's fixture manifest: initialized ONCE per (JVM, corpus) from the
+    * q112 history split (the build-once amortization the q122/q126 index
+    * fixtures use), removed by a shutdown hook. The memo keys on the
+    * corpus CONTENT token, not the path alone: a harness
+    * that regenerates the corpus at the same path within one JVM must get
+    * a fresh manifest, or q143 would serve stale history while q112
+    * recomputes fresh — two queries sharing one oracle text diverging.
+    */
   private def ensureQ143Manifest(s: SparkSession, d: String): String =
-    manifestDirs.computeIfAbsent(s"$d@${corpusToken(s, d)}", _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft_dedup_manifest")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        import java.nio.file.{Files, Path}
-        import java.util.Comparator
-        try Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-          .forEach(f => Files.deleteIfExists(f))
-        catch { case _: Exception => () }
-      }))
-      graft.streaming.DedupManifest.initManifest(
-        q112HistOf(documents(s, d)), p.toString)
-      p.toString
-    })
+    graft.util.TempDirs.memo("graft_dedup_manifest", s"$d@${corpusToken(s, d)}")(
+      graft.streaming.DedupManifest.initManifest(q112HistOf(documents(s, d)), _))
 
   /** The history FINGERPRINT table exactly as [[deltaDedupCore]] consumes
     * it — one definition shared by the per-batch recompute
@@ -1517,13 +1419,12 @@ object DedupOps {
     val hist = q112HistOf(docs)
     val arr = q112ArrivalsOf(docs)
     // one persisted (doc_id, fp, lanes) pass feeds BOTH history tables
-    // (r16, see historyPrep) — released after the core's own
-    // finishAndRelease has materialized the result
-    val prep = historyPrep(hist)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try deltaDedupCore(arr, historyFpFrom(prep), historyBandsFrom(prep),
-      docs, maxBroadcastIds)
-    finally prep.unpersist(blocking = false)
+    // (see historyPrep) — released once the core's result has filled
+    Cached.scope { c =>
+      val prep = c.hold(historyPrep(hist))
+      deltaDedupCore(arr, historyFpFrom(prep), historyBandsFrom(prep),
+        docs, maxBroadcastIds)
+    }
   }
 
   /** q112's staging/candidate/verify machinery over EXPLICIT history
@@ -1538,24 +1439,22 @@ object DedupOps {
     */
   private[graft] def deltaDedupCore(arr: DataFrame, histFp: DataFrame,
       histBands: DataFrame, verifyDocs: DataFrame,
-      maxBroadcastIds: Long = deltaBroadcastMaxIds): DataFrame = {
+      maxBroadcastIds: Long = deltaBroadcastMaxIds): DataFrame = Cached { c =>
     val arrFp = arr.select(col("doc_id"), TextOps.fingerprintCol(col("text")).as("fp"))
     val batchMin = arrFp.groupBy("fp").agg(min("doc_id").as("batch_id"))
-    val staged = arrFp
+    val staged = c.hold(arrFp
       .join(histFp, Seq("fp"), "left")
       .join(batchMin, Seq("fp"))
-      .select(col("doc_id"), col("hist_id"), col("batch_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc_id"), col("hist_id"), col("batch_id")))
     val survivors = staged
       .filter(col("hist_id").isNull && col("doc_id") === col("batch_id"))
       .select("doc_id")
-    val cand = minhashBandValues(arr.join(survivors, Seq("doc_id")))
+    val cand = c.hold(minhashBandValues(arr.join(survivors, Seq("doc_id")))
       .join(histBands, "band")
-      .select(col("doc_id"), col("h_id")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ids = cand.select(col("doc_id")).union(cand.select(col("h_id"))).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // guard the broadcast (r12 verdict #7): `ids` is candidate-bounded,
+      .select(col("doc_id"), col("h_id")).distinct())
+    val ids = c.hold(
+      cand.select(col("doc_id")).union(cand.select(col("h_id"))).distinct())
+    // guard the broadcast: `ids` is candidate-bounded,
     // not batch-sized — count it (cheap: an agg over the persisted cand)
     // and degrade to a shuffle join past the bar instead of OOMing the
     // driver on a pathological batch. The degrade is a pure re-plan
@@ -1568,9 +1467,8 @@ object DedupOps {
           s"broadcast bar $maxBroadcastIds — degrading to a shuffle join")
         verifyDocs.join(ids, "doc_id")
       }
-    val sharr = withShingleArray(filtered)
-      .select(col("doc_id"), array_distinct(col("sh")).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sharr = c.hold(withShingleArray(filtered)
+      .select(col("doc_id"), array_distinct(col("sh")).as("sh")))
     val near = cand
       .join(sharr.select(col("doc_id"), col("sh").as("sa")), "doc_id")
       .join(sharr.select(col("doc_id").as("h_id"), col("sh").as("sb")), "h_id")
@@ -1579,7 +1477,7 @@ object DedupOps {
         col("inter") / (size(col("sa")) + size(col("sb")) - col("inter")))
       .filter(col("jacc") >= 0.5)
       .groupBy("doc_id").agg(min("h_id").as("near_id"))
-    val res = staged
+    staged
       .join(near, Seq("doc_id"), "left")
       .select(col("doc_id"),
         when(col("hist_id").isNotNull, "exact_dup")
@@ -1589,7 +1487,6 @@ object DedupOps {
         coalesce(col("hist_id"),
           when(col("doc_id") =!= col("batch_id"), col("batch_id")),
           col("near_id"), lit(-1L)).as("match_id"))
-    finishAndRelease(res, staged, cand, sharr, ids)
   }
 
   /** DuckDB mirror of the array-based signature: per-doc list of sha256

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Cached
 import graft.util.Tables._
 
 /** Near-duplicate CLUSTERING — the step a real training-data dedup pipeline
@@ -57,9 +58,9 @@ object GraphOps {
     * `coalesce(cluster_id, doc_id)`, exactly as q45 does for documents in
     * no candidate pair at all.
     *
-    * Follows the DedupOps cache contract: the returned frame is persisted
-    * (node-count-sized, bounded by 2× the edge count), the caller owns it,
-    * and every per-round intermediate cache is released before return.
+    * The returned frame is persisted and filled (node-count-sized, bounded
+    * by 2× the edge count) and the caller owns it ([[graft.util.Cached]]);
+    * every per-round intermediate cache is released before return.
     *
     * `localThreshold` overrides [[localCcMaxEdges]] (0 forces the
     * distributed star path — used by specs to pin path equivalence).
@@ -75,7 +76,8 @@ object GraphOps {
     // joins), so the lineage — and every analysis/optimization/explain pass
     // over it — grows exponentially with the round count; caching alone
     // does not truncate logical plans. The RDD handle also gives
-    // deterministic release (rdd.unpersist) per round.
+    // deterministic per-round release. These RDD caches are the one cache
+    // site outside graft.util.Cached: a Scope holds DataFrames only.
     def materialize(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
       val rdd = df.rdd.persist(MEMORY_AND_DISK)
       rdd.count()
@@ -112,16 +114,13 @@ object GraphOps {
       curRdd.unpersist(false)
       val rows = localUnionFind(edges).iterator
         .map { case (n, m) => org.apache.spark.sql.Row(n, m) }.toSeq
-      val labels = spark.createDataFrame(
+      return Cached(_ => spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1),
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("doc_id",
             org.apache.spark.sql.types.LongType, nullable = false),
           org.apache.spark.sql.types.StructField("cluster_id",
-            org.apache.spark.sql.types.LongType, nullable = false))))
-        .persist(MEMORY_AND_DISK)
-      labels.count()
-      return labels
+            org.apache.spark.sql.types.LongType, nullable = false)))))
     }
 
     var converged = sig._1 == 0L
@@ -154,13 +153,10 @@ object GraphOps {
 
       // converged state is one star per component rooted at its minimum:
       // members are the v side, roots label themselves
-      val labels = cur
+      Cached(_ => cur
         .select(col("v").as("doc_id"), col("u").as("cluster_id"))
         .unionByName(
-          cur.select(col("u").as("doc_id"), col("u").as("cluster_id")).distinct())
-        .persist(MEMORY_AND_DISK)
-      labels.count()
-      labels
+          cur.select(col("u").as("doc_id"), col("u").as("cluster_id")).distinct()))
     } finally curRdd.unpersist(false)
   }
 
@@ -229,15 +225,14 @@ object GraphOps {
     * oracle-pinned (6, 8); the 20× smoke gates (6, 9), +1 sign bit per
     * corpus doubling (see [[SimilarityOps.rpLshNearDup]]).
     */
-  def embeddingClustersAt(s: SparkSession, d: String, L: Int, b: Int): DataFrame = {
+  def embeddingClustersAt(s: SparkSession, d: String, L: Int, b: Int): DataFrame = Cached { c =>
     val pairs = SimilarityOps.rpLshNearDupAt(s, d, L, b)
-    val labels = connectedComponents(
-      pairs.select(col("ia").as("u"), col("ib").as("v")))
-    val res = embeddings(s, d).select("vec_id")
+    val labels = c.adopt(connectedComponents(
+      pairs.select(col("ia").as("u"), col("ib").as("v"))))
+    embeddings(s, d).select("vec_id")
       .join(labels.withColumnRenamed("doc_id", "vec_id"), Seq("vec_id"), "left")
       .select(col("vec_id"),
         coalesce(col("cluster_id"), col("vec_id")).as("cluster_id"))
-    DedupOps.finishAndRelease(res, labels)
   }
 
   /** [[embeddingClustersAt]] with the band width SELF-SELECTED from the
@@ -263,14 +258,13 @@ object GraphOps {
     * cluster-keyed count exchange and one keyed join-back — both linear,
     * both on the already-label-shaped table.
     */
-  def clusterSampleWeights(s: SparkSession, d: String): DataFrame = {
-    val clusters = queries("q45_dedup_clusters")(s, d)
+  def clusterSampleWeights(s: SparkSession, d: String): DataFrame = Cached { c =>
+    val clusters = c.adopt(queries("q45_dedup_clusters")(s, d))
     val sizes = clusters.groupBy("cluster_id")
       .agg(count(lit(1)).as("cluster_size"))
-    val res = clusters.join(sizes, "cluster_id")
+    clusters.join(sizes, "cluster_id")
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
         round(lit(1.0) / col("cluster_size"), 6).as("weight"))
-    DedupOps.finishAndRelease(res, clusters)
   }
 
   /** q136: SOFT-DEDUP SAMPLE — q130's weights MATERIALIZED into per-doc
@@ -293,9 +287,8 @@ object GraphOps {
     * Scale shape: q130's smoked chain plus one row-local md5 threshold —
     * nothing new shuffles.
     */
-  def softDedupSample(s: SparkSession, d: String): DataFrame = {
-    val w = queries("q130_cluster_weights")(s, d)
-    val res = w
+  def softDedupSample(s: SparkSession, d: String): DataFrame = Cached { c =>
+    c.adopt(queries("q130_cluster_weights")(s, d))
       .withColumn("bound", lower(lpad(hex(
         floor(col("weight") * lit(4294967296.0)).cast("long")), 8, "0")))
       .withColumn("h", substring(md5(concat(lit("soft:"),
@@ -303,7 +296,6 @@ object GraphOps {
       .select(col("doc_id"), col("cluster_id"), col("weight"),
         (col("weight") >= 1.0 || col("h") < col("bound"))
           .cast("long").as("admit"))
-    DedupOps.finishAndRelease(res, w)
   }
 
   /** q132: DEDUP IMPACT report — the end-of-pipeline accounting a curation
@@ -319,11 +311,11 @@ object GraphOps {
     * Scale shape: q130's chain plus one doc-keyed join and one
     * source-keyed aggregation — linear.
     */
-  def dedupImpact(s: SparkSession, d: String): DataFrame = {
-    val w = queries("q130_cluster_weights")(s, d)
+  def dedupImpact(s: SparkSession, d: String): DataFrame = Cached { c =>
+    val w = c.adopt(queries("q130_cluster_weights")(s, d))
     val toks = documents(s, d).select(col("doc_id"), col("source"),
       size(split(col("text"), " ")).cast("long").as("n_tokens"))
-    val res = toks.join(w.select("doc_id", "weight"), "doc_id")
+    toks.join(w.select("doc_id", "weight"), "doc_id")
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         sum("n_tokens").as("n_tokens"),
@@ -333,7 +325,6 @@ object GraphOps {
         col("effective_docs"), col("effective_tokens"),
         round(lit(1.0) - col("effective_tokens") / col("n_tokens"), 6)
           .as("dup_token_frac"))
-    DedupOps.finishAndRelease(res, w)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -342,15 +333,14 @@ object GraphOps {
     // pair are their own singleton cluster. "Keep one per cluster" is then
     // `WHERE doc_id = cluster_id` — the terminal step of the 100 TB
     // near-dup pipeline (q35 candidates → q40 verify → q45 clusters).
-    "q45_dedup_clusters" -> ((s, d) => {
-      val cand = DedupOps.lshCandidates(documents(s, d))
-      val labels = connectedComponents(
-        cand.select(col("id_a").as("u"), col("id_b").as("v")))
-      val res = documents(s, d).select("doc_id")
+    "q45_dedup_clusters" -> ((s, d) => Cached { c =>
+      val cand = c.adopt(DedupOps.lshCandidates(documents(s, d)))
+      val labels = c.adopt(connectedComponents(
+        cand.select(col("id_a").as("u"), col("id_b").as("v"))))
+      documents(s, d).select("doc_id")
         .join(labels, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-      DedupOps.finishAndRelease(res, cand, labels)
     }),
 
     // SOFT dedup: per-document sampling weights from q45's clusters —
@@ -386,18 +376,17 @@ object GraphOps {
     // (-score, doc_id) struct (same device as q61's argmin) — one
     // aggregation exchange over the cluster labels, no per-cluster window
     // sort; quality scores are row-local.
-    "q65_cluster_reps" -> ((s, d) => {
-      val clusters = queries("q45_dedup_clusters")(s, d)
+    "q65_cluster_reps" -> ((s, d) => Cached { c =>
+      val clusters = c.adopt(queries("q45_dedup_clusters")(s, d))
       val scored = documents(s, d)
         .select(col("doc_id"),
           round(TextOps.qualityScoreCol(col("text")), 4).as("score"))
-      val res = scored.join(clusters, "doc_id")
+      scored.join(clusters, "doc_id")
         .groupBy("cluster_id")
         .agg(min(struct((-col("score")).as("ns"), col("doc_id"))).as("best"),
           count(lit(1)).as("n_members"))
         .select(col("cluster_id"), col("best.doc_id").as("rep_id"),
           (-col("best.ns")).as("rep_score"), col("n_members"))
-      DedupOps.finishAndRelease(res, clusters)
     }),
 
     // The whole-pipeline disposition report: every document's dedup fate
@@ -419,10 +408,9 @@ object GraphOps {
     // fingerprint-keeper min are both map-side-combinable aggs; the final
     // assembly is three equi-joins on doc_id/fp/cluster_id — no new
     // machinery beyond q45's clustering.
-    "q73_dedup_disposition" -> ((s, d) => {
-      val clusters = queries("q45_dedup_clusters")(s, d)
-      val (out, scored) = dedupDispositionStaged(documents(s, d), clusters)
-      DedupOps.finishAndRelease(out, clusters, scored)
+    "q73_dedup_disposition" -> ((s, d) => Cached { c =>
+      val clusters = c.adopt(queries("q45_dedup_clusters")(s, d))
+      dedupDispositionIn(c, documents(s, d), clusters)
     }),
 
     // Leak-free train/val/test split: q58 hash-splits per DOCUMENT, which
@@ -460,48 +448,40 @@ object GraphOps {
     * specs plant them through this seam).
     */
   private[operators] def dedupDisposition(docs: DataFrame,
-      clusters: DataFrame): DataFrame = {
-    val (out, scored) = dedupDispositionStaged(docs, clusters)
-    DedupOps.finishAndRelease(out, scored)
-  }
+      clusters: DataFrame): DataFrame =
+    Cached(dedupDispositionIn(_, docs, clusters))
 
-  /** [[dedupDisposition]] with its persisted per-doc projection exposed so
-    * the q73 registration can release it together with the clusters in
-    * ONE materialization (r16, adjudicating the r15 driver-window ×5.9).
-    * The projection computes BOTH text derivations (quality score and
-    * fingerprint) in one pass over the corpus and pins the cluster join
-    * once — previously the score and fingerprint scans were separate
-    * subtrees re-derived per consumer, which left the assembly's plan
-    * (three equi-joins off two corpus scans) free to flip with AQE/cache
-    * state across windows (the textKeeperMap discipline, applied here).
-    * The persisted frame is (doc_id, score, fp, cluster_id) — bounded,
-    * MEMORY_AND_DISK like every internal persist.
+  /** [[dedupDisposition]] with its per-doc projection held in the caller's
+    * scope `c`, so the q73 registration releases it together with the
+    * clusters after ONE fill. The projection computes BOTH text
+    * derivations (quality score and fingerprint) in one pass over the
+    * corpus and pins the cluster join once — as separate subtrees
+    * re-derived per consumer, the assembly's plan (three equi-joins off
+    * two corpus scans) was free to flip with AQE/cache state across
+    * windows. The held frame is (doc_id, score, fp, cluster_id).
     */
-  private def dedupDispositionStaged(docs: DataFrame,
-      clusters: DataFrame): (DataFrame, DataFrame) = {
-    val scored = docs
+  private def dedupDispositionIn(c: Cached.Scope, docs: DataFrame,
+      clusters: DataFrame): DataFrame = {
+    // Not filled (nor widened): the racing recompute runs on idle cores,
+    // which costs less wall than a fill's job barrier; the cache itself
+    // stays because it pins the plan (OPTIMIZATION_r17.md).
+    val scored = c.hold(docs
       .select(col("doc_id"),
         round(TextOps.qualityScoreCol(col("text")), 4).as("score"),
         TextOps.fingerprintCol(col("text")).as("fp"))
-      .join(clusters, "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // NO entry widen / eager fill (r17 adjudication): ×1.68 on q73 in a
-    // clean A/B window — idle-core racing recompute vs real exchange +
-    // barrier cost; the r16 staged persist itself stays (it pins the
-    // plan). See OPTIMIZATION_r17.md.
+      .join(clusters, "doc_id"))
     val reps = scored
       .groupBy("cluster_id")
       .agg(min(struct((-col("score")).as("ns"), col("doc_id"))).as("best"))
       .select(col("cluster_id"), col("best.doc_id").as("rep_id"))
     val fpKeeper = scored.groupBy("fp").agg(min("doc_id").as("fp_keeper"))
-    val out = scored.join(fpKeeper, "fp")
+    scored.join(fpKeeper, "fp")
       .join(reps, "cluster_id")
       .select(col("doc_id"),
         when(col("doc_id") === col("rep_id"), "kept")
           .when(col("doc_id") =!= col("fp_keeper"), "exact_dup")
           .otherwise("near_dup").as("status"),
         col("rep_id").as("kept_id"))
-    (out, scored)
   }
 
   // Recursive-CTE transitive closure over the same candidate pairs —

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Cached
+
 /** Storage mechanics for the persisted IVF-PQ index (r14): versioned index
   * sets with a one-marker-create atomic swap, a single-writer lease, and
   * the append ledger's schema/fold rules. This closes the r13 lifecycle
@@ -328,25 +330,28 @@ object IvfPqIndexStore {
       return false
     }
     // the batch feeds the emptiness check, the table append AND the
-    // ledger rows — persist so the source is read once per trigger
-    val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (b.isEmpty) return false
-      // inflight-marker protocol (r15): the marker brackets exactly the
-      // append→ledger window. Finding one here for an epoch NOT in the
-      // ledger means a prior attempt crashed inside that window and may
-      // have committed its table append — the re-append below can then
-      // create exact-duplicate rows, so the set is stamped dup-exposed
-      // ONCE and duplicate-tolerant readers (the staleness audit) pay
-      // their defensive collapse only on sets where it can matter.
-      if (fs.exists(inflight)) markDupsPossible(s, rdir)
-      fs.create(inflight, true).close()
-      append(b, rdir)
-      appendLedger(b.select(col(idCol).as("vec_id")), epoch, rdir)
-      fs.delete(inflight, false): Unit
-      applied.synchronized { applied += epoch }
-      true
-    } finally b.unpersist(blocking = false): Unit
+    // ledger rows — held so the source is read once per trigger (a batch
+    // that arrives cached stays its caller's)
+    Cached.scope { c =>
+      val b = c.hold(batch)
+      if (b.isEmpty) false
+      else {
+        // inflight-marker protocol: the marker brackets exactly the
+        // append→ledger window. Finding one here for an epoch NOT in the
+        // ledger means a prior attempt crashed inside that window and may
+        // have committed its table append — the re-append below can then
+        // create exact-duplicate rows, so the set is stamped dup-exposed
+        // ONCE and duplicate-tolerant readers (the staleness audit) pay
+        // their defensive collapse only on sets where it can matter.
+        if (fs.exists(inflight)) markDupsPossible(s, rdir)
+        fs.create(inflight, true).close()
+        append(b, rdir)
+        appendLedger(b.select(col(idCol).as("vec_id")), epoch, rdir)
+        fs.delete(inflight, false)
+        applied.synchronized { applied += epoch }
+        true
+      }
+    }
   }
 
   /** The leased foreachBatch attach every epoch sink shares: claim the

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Cached
 import graft.util.Tables._
 
 /** Multimodal (binary) column plumbing for a training-data pipeline:
@@ -481,20 +482,17 @@ object MultimodalOps {
     * O(log² n) path; final assembly is two keyed joins against the tiny
     * keeper/rep tables. Holds at 100 TB.
     */
-  /** The LAZY half of [[kindWaterfall]]: the disposition frame plus the
-    * persisted upstream handles (`a`, the CC labels) the caller must
-    * release after materializing. mediaWaterfall composes TWO of these
-    * under one union and pays ONE finish — the r12 shape materialized and
-    * cached each kind's result separately, which at the sf0.1 scale was
-    * ~4 extra job barriers of pure scheduling on cached sub-second data.
+  /** The LAZY half of [[kindWaterfall]]: the disposition frame, with its
+    * upstream caches (`a`, the survivors, the pair frame, the CC labels)
+    * held in the caller's scope `c`. mediaWaterfall composes TWO of these
+    * under one union and pays ONE fill — filling each kind's result
+    * separately cost ~4 extra job barriers of pure scheduling on cached
+    * sub-second data at sf0.1.
     */
-  private def kindWaterfallLazy(assets: DataFrame): (DataFrame, Seq[DataFrame]) = {
-    val a = assets.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // NO eager fill (r17 adjudication): a count() here + on survivors
-    // serialized the decode behind job barriers and measured ×1.06 on
-    // q125 — the racing recomputes overlap on idle cores at sf0.1. The
-    // r16 cache-ownership fix in hammingNearDup (kept) already stops the
-    // cross-call unpersist that was the real q125 leak.
+  private def kindWaterfallLazy(c: Cached.Scope, assets: DataFrame): DataFrame = {
+    // Not filled (here nor on survivors): a fill serializes the decode
+    // behind a job barrier, and the racing recomputes overlap on idle cores.
+    val a = c.hold(assets)
     val ok = a.filter(col("ok"))
     val ek = ok.groupBy("digest").agg(min("doc_id").as("exact_keeper"))
     val withK = ok.join(ek, "digest")
@@ -502,22 +500,19 @@ object MultimodalOps {
     // keeper-sized; persisted because the pair stage and the label/rep
     // joins each reference it and every reference would otherwise re-run
     // the digest-election groupBy+join chain above it. hammingNearDup
-    // sees the cache and leaves ownership HERE (r16 ADVICE medium): it
-    // used to unpersist survivors after the pair materialize, so the
-    // rep/assembly joins below recomputed the election chain.
-    val survivors = withK.filter(col("doc_id") === col("exact_keeper"))
-      .select(col("doc_id"), col("phash").as("dhash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // hammingNearDup returns a PERSISTED pair frame (r16) — it joins the
-    // release list below; CC consumes it exactly once
-    val pairs = hammingNearDup(survivors)
-    val comp = GraphOps.connectedComponents(
-      pairs.select(col("ia").as("u"), col("ib").as("v")))
+    // sees the cache and leaves it to this scope.
+    val survivors = c.hold(withK.filter(col("doc_id") === col("exact_keeper"))
+      .select(col("doc_id"), col("phash").as("dhash")))
+    // the pair frame and the CC labels are the callees' filled outputs;
+    // this scope releases them
+    val pairs = c.adopt(hammingNearDup(survivors))
+    val comp = c.adopt(GraphOps.connectedComponents(
+      pairs.select(col("ia").as("u"), col("ib").as("v"))))
     val rep = survivors.select("doc_id")
       .join(comp, Seq("doc_id"), "left")
       .select(col("doc_id").as("exact_keeper"),
         coalesce(col("cluster_id"), col("doc_id")).as("keeper_rep"))
-    val res = a.select("doc_id", "ok")
+    a.select("doc_id", "ok")
       .join(withK.select("doc_id", "exact_keeper"), Seq("doc_id"), "left")
       .join(rep, Seq("exact_keeper"), "left")
       .select(col("doc_id"),
@@ -526,16 +521,10 @@ object MultimodalOps {
           .when(col("doc_id") =!= col("keeper_rep"), "near_dup")
           .otherwise("kept").as("stage"),
         col("keeper_rep").as("kept_id"))
-    // comp is the persisted frame connectedComponents hands its caller —
-    // it goes on the release list too (r12 ADVICE: it leaked one
-    // keeper-sized label table per invocation for the life of the session)
-    (res, Seq(a, comp, survivors, pairs))
   }
 
-  private[operators] def kindWaterfall(assets: DataFrame): DataFrame = {
-    val (res, release) = kindWaterfallLazy(assets)
-    DedupOps.finishAndRelease(res, release: _*)
-  }
+  private[operators] def kindWaterfall(assets: DataFrame): DataFrame =
+    Cached(kindWaterfallLazy(_, assets))
 
   /** q125: the MULTIMODAL curation waterfall — q113's composed-pipeline
     * discipline applied to the binary modalities: decode (q98/q99's real
@@ -571,13 +560,12 @@ object MultimodalOps {
     * two waterfalls (each scale-argued on its own) plus one doc-keyed
     * aggregation and one doc-keyed join.
     */
-  def multimodalVerdict(s: SparkSession, d: String): DataFrame = {
-    val text = TextOps.pipelineWaterfall(documents(s, d))
-    val media = mediaWaterfall(s, d)
-    val res = verdictAssembly(text.select(col("doc_id"), col("stage")), media)
-    // text and media are the persisted caller-owned outputs of the two
-    // waterfalls — release them after materializing the verdict
-    DedupOps.finishAndRelease(res, text, media)
+  def multimodalVerdict(s: SparkSession, d: String): DataFrame = Cached { c =>
+    // text and media are the two waterfalls' filled outputs — released
+    // after the verdict fills
+    val text = c.adopt(TextOps.pipelineWaterfall(documents(s, d)))
+    val media = c.adopt(mediaWaterfall(s, d))
+    verdictAssembly(text.select(col("doc_id"), col("stage")), media)
   }
 
   /** q128's verdict assembly over EXPLICIT (doc_id, stage) text rows and
@@ -626,18 +614,17 @@ object MultimodalOps {
   /** [[keeperConsistency]] over explicit documents + media-disposition
     * frames — the seam the spec plants a split-identity pair through.
     * `media` must carry q125's (kind, doc_id, stage, kept_id) shape; it is
-    * released after the materialize (it is mediaWaterfall's persisted
+    * adopted and released after the fill (it is mediaWaterfall's persisted
     * output on the operator path).
     */
   private[operators] def keeperConsistencyFrom(docs: DataFrame,
-      media: DataFrame): DataFrame = {
-    val text = TextOps.pipelineWaterfall(docs)
-    val tk = TextOps.textKeeperMap(docs)
-    val res = consistencyAssembly(
-      text.select(col("doc_id"), col("stage")), tk, media)
-    // text, media AND the keeper map are persisted upstream outputs —
-    // all released after the one materialization
-    DedupOps.finishAndRelease(res, text, media, tk)
+      media: DataFrame): DataFrame = Cached { c =>
+    // text, media AND the keeper map are filled upstream outputs — all
+    // released after the one fill
+    c.adopt(media)
+    val text = c.adopt(TextOps.pipelineWaterfall(docs))
+    val tk = c.adopt(TextOps.textKeeperMap(docs))
+    consistencyAssembly(text.select(col("doc_id"), col("stage")), tk, media)
   }
 
   /** q134's consistency assembly over EXPLICIT (doc_id, stage) text rows,
@@ -657,20 +644,17 @@ object MultimodalOps {
         sum((col("keep_id") =!= col("kept_id")).cast("long")).as("n_split"))
       .orderBy("kind", "text_stage")
 
-  def mediaWaterfall(s: SparkSession, d: String): DataFrame = {
-    // ONE finish for both kinds: the returned UNION is the persisted frame
-    // (so the caller's unpersist() hits the actual cached plan — r12
-    // ADVICE; CacheReleaseSpec pins it) and every per-kind upstream cache
-    // is released after the single materialization. No final orderBy: the
-    // driver's comparator is row-sorted and a global sort would cost a
-    // range-sampling pass — the r12 verdict already marked it the first
-    // thing to drop at scale.
-    val (img, relImg) = kindWaterfallLazy(imageAssets(s, d).toDF())
-    val (aud, relAud) = kindWaterfallLazy(audioAssets(s, d).toDF())
-    val res = img.withColumn("kind", lit("image"))
+  def mediaWaterfall(s: SparkSession, d: String): DataFrame = Cached { c =>
+    // ONE fill for both kinds: the returned UNION is the persisted frame
+    // (CacheReleaseSpec pins that the caller can release it) and every
+    // per-kind upstream cache is released after that single fill. No
+    // final orderBy: the driver's comparator is row-sorted and a global
+    // sort would cost a range-sampling pass.
+    val img = kindWaterfallLazy(c, imageAssets(s, d).toDF())
+    val aud = kindWaterfallLazy(c, audioAssets(s, d).toDF())
+    img.withColumn("kind", lit("image"))
       .unionByName(aud.withColumn("kind", lit("audio")))
       .select("kind", "doc_id", "stage", "kept_id")
-    DedupOps.finishAndRelease(res, relImg ++ relAud: _*)
   }
 
   /** Shared band-bucket Hamming search over a (doc_id, dhash) frame —
@@ -722,40 +706,24 @@ object MultimodalOps {
     hashes.filter(col("dhash") =!= -1L)
       .select(col("doc_id"), explode(expr(hammingBandArrayExpr("dhash"))).as("band"))
 
-  private[graft] def hammingNearDup(hashes: DataFrame): DataFrame = {
+  private[graft] def hammingNearDup(hashes: DataFrame): DataFrame = Cached { c =>
     // the 8-byte dhash rides THROUGH the pair stage (PairBuckets carry):
     // the exact Hamming verify is then row-local — no ia/ib join-backs.
-    // The hash frame is persisted + eagerly materialized (r16): the plan
-    // references it on BOTH sides of the bucket self-join, and under AQE
-    // the static ReuseExchange rule does not fire (measured: q105's
-    // executed plan carried the full per-row codec-decode lineage TWICE —
-    // two ~15-20 s-summed stages for one ~3 s decode's worth of work;
-    // with AQE off the same plan shows ReusedExchange). The cache is
+    // The hash frame is held and filled: the plan references it on BOTH
+    // sides of the bucket self-join, and under AQE the static
+    // ReuseExchange rule does not fire (q105's executed plan carried the
+    // full per-row codec-decode lineage twice). The cache is
     // corpus-linear (doc_id + 64-bit hash) and released after the pair
-    // frame materializes — UNLESS the caller already persisted it
-    // (kindWaterfallLazy's survivors): persist on an
-    // already-cached plan is a no-op, but the release here would drop the
-    // CALLER's cache out from under its later joins (r16 ADVICE medium —
-    // q125's rep/assembly joins recomputed the digest-election chain).
-    // Cache ownership is taken only when the input arrives uncached.
-    val preCached =
-      hashes.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val h =
-      if (preCached) hashes
-      else {
-        val p = hashes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        p
-      }
+    // frame fills — unless the caller already cached it
+    // (kindWaterfallLazy's survivors), which stays the caller's.
+    val h = c.hold(hashes, fill = true)
     val sigs = h.select(col("doc_id"), col("dhash"),
         explode(expr(hammingBandStructsExpr("dhash"))).as("s"))
       .select(col("doc_id"), col("dhash"), col("s.band").as("band"), col("s.v").as("v"))
-    val res = PairBuckets.candidatePairs(sigs, Seq("band", "v"), "doc_id", carry = Seq("dhash"))
+    PairBuckets.candidatePairs(sigs, Seq("band", "v"), "doc_id", carry = Seq("dhash"))
       .withColumn("hamming", expr("cast(bit_count(dhash_a ^ dhash_b) as bigint)"))
       .filter(col("hamming") <= 3)
       .select("ia", "ib", "hamming")
-    if (preCached) DedupOps.finishAndRelease(res)
-    else DedupOps.finishAndRelease(res, h)
   }
 
   /** q107: uniform frame sampling over the video assets — the
@@ -927,21 +895,9 @@ object MultimodalOps {
     * q122/q126 index fixtures use, keyed on the corpus content token (the
     * q143 memo discipline), removed by a shutdown hook.
     */
-  private val curationDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def ensureCurationStore(s: SparkSession, d: String): String =
-    curationDirs.computeIfAbsent(s"$d@${DedupOps.corpusToken(s, d)}", _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft_curation")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        import java.nio.file.{Files, Path}
-        import java.util.Comparator
-        try Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-          .forEach(f => Files.deleteIfExists(f))
-        catch { case _: Exception => () }
-      }))
-      graft.streaming.CurationStore.materialize(s, d, p.toString)
-      p.toString
-    })
+    graft.util.TempDirs.memo("graft_curation", s"$d@${DedupOps.corpusToken(s, d)}")(
+      graft.streaming.CurationStore.materialize(s, d, _))
 
   /** q87's operator body, reusable over any (doc_id, media BINARY) frame —
     * see the q87 entry comment for the digest construction and scale

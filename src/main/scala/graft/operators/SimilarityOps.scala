@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.functions.VectorFunctions
+import graft.util.Cached
 import graft.util.Tables._
 
 /** Similarity search over the `embeddings` table (Array[Float], unit-norm).
@@ -24,24 +25,11 @@ import graft.util.Tables._
   */
 object SimilarityOps {
 
-  /** One index temp directory per (JVM, key), created lazily and removed
-    * by a shutdown hook — q122/q126's repeated invocations overwrite in
-    * place instead of leaking a copy per call (r11 ADVICE).
+  /** One index temp directory per (JVM, key): q122/q126's repeated
+    * invocations overwrite in place instead of leaking a copy per call.
     */
-  private val ivfPqTmpDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def ivfPqTmpDir(key: String): String =
-    ivfPqTmpDirs.computeIfAbsent(key, _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft_ivfpq_index")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        import java.nio.file.{Files, Path}
-        import java.util.Comparator
-        try Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-          .forEach(f => Files.deleteIfExists(f))
-        catch { case _: Exception => () }
-      }))
-      p.toString
-    })
+    graft.util.TempDirs.memo("graft_ivfpq_index", key)(_ => ())
 
   /** Build-once memo per (JVM, key): the index WRITE is a one-time
     * construction cost — a production deployment builds the index once and
@@ -527,15 +515,14 @@ object SimilarityOps {
     * does — cosine pairs don't cross cells, so salting only duplicates
     * the hot cell's rows, not the corpus).
     */
-  def semDedup(s: SparkSession, d: String, theta: Double = 0.45): DataFrame = {
+  def semDedup(s: SparkSession, d: String, theta: Double = 0.45): DataFrame = Cached { c =>
     val base = prepped(s, d)
     // the assignment feeds BOTH pair-join sides and the final audit join —
-    // persist it once instead of re-running the scan+assign subtree three
-    // times (the q70 codebook rationale; released via the cache contract)
-    val cells = rankedCells(base, Seq("e", "nrm"))
+    // hold it once instead of re-running the scan+assign subtree three
+    // times (the q70 codebook rationale)
+    val cells = c.hold(rankedCells(base, Seq("e", "nrm"))
       .filter(col("rn") === 1)
-      .select(col("vec_id"), col("e"), col("nrm"), col("c_label"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("vec_id"), col("e"), col("nrm"), col("c_label")))
     val a = cells.select(col("c_label"), col("vec_id").as("ia"),
       col("e").as("ea"), col("nrm").as("na"))
     val b = cells.select(col("c_label"), col("vec_id").as("ib"),
@@ -546,11 +533,10 @@ object SimilarityOps {
       .filter(col("cos") >= theta)
       .select(col("ib").as("vec_id")).distinct()
       .withColumn("dup", lit(1L))
-    val out = cells.select(col("vec_id"), col("c_label"))
+    cells.select(col("vec_id"), col("c_label"))
       .join(dropped, Seq("vec_id"), "left")
       .select(col("vec_id"), col("c_label").cast("long").as("c_label"),
         when(col("dup").isNull, 1L).otherwise(0L).as("keep"))
-    DedupOps.finishAndRelease(out, cells)
   }
 
   /** IVF-PQ search [Jégou et al., TPAMI'11, §IV]: the composition of q41's
@@ -581,30 +567,27 @@ object SimilarityOps {
     * harness would sweep).
     */
   def ivfPqSearch(s: SparkSession, d: String, nProbes: Int = 2,
-      k: Int = 5): DataFrame = {
+      k: Int = 5): DataFrame = Cached { c =>
     require(nProbes >= 1, s"nProbes must be >= 1, got $nProbes")
     val base = prepped(s, d)
-    // persisted NARROW (r17, guide §2.3/§2.5): lists (main job) and probes
-    // (broadcast-side subtree) both consume the ranked assignment, and
-    // broadcast builds run on their own threads — unpersisted, the
-    // centroid aggregation + assignment window ran TWICE concurrently
-    // (and two independent centroid avg passes even risk a summation-order
-    // desync at the round(…,6) boundary, the rankedCellsWith scaladoc
-    // hazard). Projected to (vec_id, c_label, rn) so the cache never
-    // holds embedding arrays.
-    val ranked = rankedCells(base, Seq("e"))
-      .select(col("vec_id"), col("c_label"), col("rn"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ranked.count()
+    // held NARROW and filled: lists (main job) and probes (broadcast-side
+    // subtree) both consume the ranked assignment, and broadcast builds
+    // run on their own threads — uncached, the centroid aggregation +
+    // assignment window ran TWICE concurrently (and two independent
+    // centroid avg passes even risk a summation-order desync at the
+    // round(…,6) boundary, the rankedCellsWith scaladoc hazard).
+    // Projected to (vec_id, c_label, rn) so the cache never holds
+    // embedding arrays.
+    val ranked = c.hold(rankedCells(base, Seq("e"))
+      .select(col("vec_id"), col("c_label"), col("rn")), fill = true)
     val lists = ranked.filter(col("rn") === 1)
       .select(col("c_label"), col("vec_id").as("cid"))
     val probes = ranked.filter(col("rn") <= nProbes && col("vec_id") < 3)
       .select(col("c_label"), col("vec_id").as("qid"))
-    // same persist rationale as q66: codes and LUT both consume the (tiny)
-    // codebook, and broadcast-side subtrees get no exchange reuse
-    val codebook = pqCodebook(base)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    codebook.count() // eager fill: the LUT broadcast build races the main job's scan (r17)
+    // same rationale as q66: codes and LUT both consume the (tiny)
+    // codebook, and broadcast-side subtrees get no exchange reuse; filled
+    // because the LUT broadcast build races the main job's scan
+    val codebook = c.hold(pqCodebook(base), fill = true)
     // the inverted file with PQ codes: one equi-join on vec_id (both sides
     // linear — the index build)
     val listCodes = pqCodes(base, codebook)
@@ -626,11 +609,10 @@ object SimilarityOps {
       .groupBy("qid", "cid")
       .agg(round(sum("qdist"), 6).as("adist"))
     val tw = Window.partitionBy("qid").orderBy(col("adist"), col("cid"))
-    val topk = adist.withColumn("rn", row_number().over(tw))
+    adist.withColumn("rn", row_number().over(tw))
       .filter(col("rn") <= k)
       .select(col("qid"), col("cid"), col("adist"), col("rn").cast("long").as("rn"))
       .orderBy("qid", "rn")
-    DedupOps.finishAndRelease(topk, codebook, ranked)
   }
 
   /** q39's operator body with the block count exposed: exact
@@ -687,34 +669,27 @@ object SimilarityOps {
     * order, and a value straddling the round(…, 6) boundary would desync
     * the saved inverted lists from the saved probe table).
     */
-  def saveIvfPqIndexFrom(base: DataFrame, dir: String): Unit = {
-    // same persist rationale as q70: codebook feeds codes AND is saved;
-    // centroids feed the cell assignment AND are saved
-    val codebook = pqCodebook(base)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val centroids = centroidsOf(base)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val lists = rankedCellsWith(base, centroids, Seq("e"))
-        .filter(col("rn") === 1)
-        .select(col("c_label"), col("vec_id").as("cid"))
-      centroids.write.mode("overwrite").parquet(s"$dir/centroids")
-      codebook.write.mode("overwrite").parquet(s"$dir/codebook")
-      pqCodes(base, codebook)
-        .select(col("vec_id").as("cid"),
-          col("subspace").cast("int").as("subspace"),
-          col("code").cast("int").as("code"))
-        .join(lists, "cid")
-        .write.mode("overwrite").partitionBy("c_label")
-        .parquet(s"$dir/codes")
-      // unique build stamp: the maintenance memos key on (path, build id)
-      // so a delete-and-rebuild at the same path invalidates them (r13
-      // ADVICE — path-alone keys went stale on path reuse within one JVM)
-      IvfPqIndexStore.writeBuildId(base.sparkSession, dir)
-    } finally {
-      codebook.unpersist(blocking = false)
-      centroids.unpersist(blocking = false)
-    }
+  def saveIvfPqIndexFrom(base: DataFrame, dir: String): Unit = Cached.scope { c =>
+    // same rationale as q70: codebook feeds codes AND is saved; centroids
+    // feed the cell assignment AND are saved
+    val codebook = c.hold(pqCodebook(base))
+    val centroids = c.hold(centroidsOf(base))
+    val lists = rankedCellsWith(base, centroids, Seq("e"))
+      .filter(col("rn") === 1)
+      .select(col("c_label"), col("vec_id").as("cid"))
+    centroids.write.mode("overwrite").parquet(s"$dir/centroids")
+    codebook.write.mode("overwrite").parquet(s"$dir/codebook")
+    pqCodes(base, codebook)
+      .select(col("vec_id").as("cid"),
+        col("subspace").cast("int").as("subspace"),
+        col("code").cast("int").as("code"))
+      .join(lists, "cid")
+      .write.mode("overwrite").partitionBy("c_label")
+      .parquet(s"$dir/codes")
+    // unique build stamp: the maintenance memos key on (path, build id)
+    // so a delete-and-rebuild at the same path invalidates them
+    // (path-alone keys went stale on path reuse within one JVM)
+    IvfPqIndexStore.writeBuildId(base.sparkSession, dir)
   }
 
   /** q133: REBUILD-AND-SWAP — the actuator for q127's `rebuild` flag (the
@@ -1682,7 +1657,7 @@ object SimilarityOps {
     * Both passes are linear, map-side combinable, sort-free. Only
     * precision@10 keeps a rank window — WITH the rank-≤-k filter that
     * plants the map-side `WindowGroupLimit` (the q124/q137 pin). The
-    * scored stream is corpus×|queries| and deliberately unpersisted
+    * scored stream is corpus×|queries| and deliberately uncached
     * (q137's argument).
     */
   def retrievalQuality(s: SparkSession, d: String, nQueries: Long = 50L,
@@ -1872,21 +1847,17 @@ object SimilarityOps {
     // This is the EXHAUSTIVE variant (every code row scores); q70 is the
     // IVF-bounded composition that scores only probed inverted lists —
     // q66 stays as the recall reference its specs measure against.
-    "q66_pq_adc_topk" -> ((s, d) => {
+    "q66_pq_adc_topk" -> ((s, d) => Cached { c =>
       val base = prepped(s, d)
       // both the code-assignment branch and the query LUT consume the
       // codebook; exchange reuse does NOT collapse duplicated
       // broadcast-side subtrees here (probed empirically — unlike q59's
       // shuffle-side reuse), so the corpus aggregation under it would run
-      // twice. Persist the (tiny, m×k-row) codebook instead and release
-      // it under the DedupOps cache contract before returning.
-      val codebook = pqCodebook(base)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // eager fill (r17): the lut broadcast build and the main job's code
-      // assignment scan the codebook concurrently (broadcast exchanges
-      // materialize on their own threads) — racing scans of the unfilled
-      // cache each re-run the corpus-sized codebook aggregation
-      codebook.count()
+      // twice. Hold the (tiny, m×k-row) codebook instead. Filled: the lut
+      // broadcast build and the main job's code assignment scan it
+      // concurrently, and racing scans of an unfilled cache each re-run
+      // the corpus-sized codebook aggregation.
+      val codebook = c.hold(pqCodebook(base), fill = true)
       val codes = pqCodes(base, codebook)
       val lut = base.filter(col("vec_id") < 3)
         .select(col("vec_id").as("qid"), col("e").as("qe"))
@@ -1902,11 +1873,10 @@ object SimilarityOps {
         .groupBy("qid", "cid")
         .agg(round(sum("qdist"), 6).as("adist"))
       val w = Window.partitionBy("qid").orderBy(col("adist"), col("cid"))
-      val topk = adist.withColumn("rn", row_number().over(w))
+      adist.withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 5)
         .select(col("qid"), col("cid"), col("adist"), col("rn").cast("long").as("rn"))
         .orderBy("qid", "rn")
-      DedupOps.finishAndRelease(topk, codebook)
     }),
 
     // IVF-PQ search — the full composition: coarse cells bound the

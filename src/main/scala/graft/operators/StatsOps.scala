@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Cached
 import graft.util.Tables._
 
 /** Distribution statistics and sampling for a training-data pipeline:
@@ -248,10 +249,9 @@ object StatsOps {
     * pins set equality, and the q78/q57 exact-plus-scale-path discipline
     * applies.
     */
-  def topKPerStratumPrefiltered(docs: DataFrame, k: Int): DataFrame = {
+  def topKPerStratumPrefiltered(docs: DataFrame, k: Int): DataFrame = Cached { c =>
     import org.apache.spark.sql.expressions.Window
-    val h = kSampleHash(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val h = c.hold(kSampleHash(docs))
     val space = 4294967296L // 2^32
     val thr = h.groupBy("source").agg(count(lit(1)).as("n"))
       .withColumn("thr", least(lit(space),
@@ -266,14 +266,10 @@ object StatsOps {
       .unionByName(h.join(broadcast(short), "source")
         .select("doc_id", "source", "hv"))
     val w = Window.partitionBy("source").orderBy(col("hv"), col("doc_id"))
-    val res = input
+    input
       .withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
       .select(col("doc_id"), col("source"), col("rk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    res.count() // force before releasing the hash cache
-    h.unpersist(blocking = false)
-    res
   }
 
   /** q103's query-bound sample size. */

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.util.Cached
 import graft.util.Tables._
 
 /** Text-analysis operators for a training-data pipeline over `documents`:
@@ -199,14 +200,12 @@ object TextOps {
     * vs sharded q57 pair is the same discipline). Scale shape: surprisal
     * (one row per doc) is persisted once, the cutoff agg is map-side
     * combinable (QuantileSummaries partials), the two cutoffs per source
-    * broadcast back, and the bucket compare is row-local. Cache contract:
-    * the returned frame is persisted and the caller owns `unpersist()`;
-    * the upstream surprisal cache is released before return
-    * (finishAndRelease).
+    * broadcast back, and the bucket compare is row-local. The returned
+    * frame is persisted and caller-owned; the surprisal cache is released
+    * before return ([[graft.util.Cached]]).
     */
-  def surprisalSplitApprox(docs: DataFrame, accuracy: Int = 10000): DataFrame = {
-    val surp = surprisalBase(docs, Seq("doc_id", "source"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def surprisalSplitApprox(docs: DataFrame, accuracy: Int = 10000): DataFrame = Cached { c =>
+    val surp = c.hold(surprisalBase(docs, Seq("doc_id", "source")))
     // ONE sketch per source group (array of percentages), not one per
     // cutoff — two scalar calls would each maintain and merge their own
     // QuantileSummaries over every row
@@ -214,13 +213,12 @@ object TextOps {
       percentile_approx(col("avg_surprisal"),
         array(lit(1.0 / 3), lit(2.0 / 3)), lit(accuracy)).as("cs"))
       .select(col("source"), col("cs")(0).as("c1"), col("cs")(1).as("c2"))
-    val out = surp.join(broadcast(cuts), "source")
+    surp.join(broadcast(cuts), "source")
       .select(
         col("doc_id"), col("source"), col("avg_surprisal"),
         when(col("avg_surprisal") <= col("c1"), "head")
           .when(col("avg_surprisal") > col("c2"), "tail")
           .otherwise("middle").as("bucket"))
-    DedupOps.finishAndRelease(out, surp)
   }
 
   /** q78's operator body: per-source surprisal tertiles (see the q78 entry
@@ -410,23 +408,20 @@ object TextOps {
     * this is precisely the composition the per-operator smoke entries
     * certify piecewise.
     */
-  def pipelineWaterfall(docs: DataFrame): DataFrame = {
+  def pipelineWaterfall(docs: DataFrame): DataFrame = Cached { c =>
     val base = docs.select(col("doc_id"), col("text"))
     val evalGrams = base.filter(col("doc_id") < 10)
       .select(split(col("text"), " ").as("t"))
       .filter(size(col("t")) >= 5)
       .select(explode(array_distinct(expr(DedupOps.gram5ArrayExpr("t")))).as("g"))
       .distinct()
-    val corpus = base.filter(col("doc_id") >= 10)
+    // Not filled (nor widened): the racing recomputes run on idle cores,
+    // which costs less wall than a fill's job barrier (OPTIMIZATION_r17.md).
+    val corpus = c.hold(base.filter(col("doc_id") >= 10)
       .select(col("doc_id"), col("text"),
         gopherKeepCol(col("text")).as("gate"),
         fingerprintCol(col("text")).as("fp"),
-        qualityScoreCol(col("text")).as("q"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // NO entry widen / eager fill (r17 adjudication): both measured ×1.89
-    // on q113 in a clean A/B window — the racing recomputes they remove
-    // run on idle cores at sf0.1 while the exchange + fill barrier are
-    // pure added wall. See OPTIMIZATION_r17.md.
+        qualityScoreCol(col("text")).as("q")))
     val keeper = keeperElection(corpus.filter(col("gate")))
     val contam = corpus.filter(col("gate"))
       .join(keeper, "fp")
@@ -438,7 +433,7 @@ object TextOps {
       .join(broadcast(evalGrams), "g")
       .select("doc_id").distinct()
       .withColumn("contam", lit(1L))
-    val res = corpus
+    corpus
       .join(keeper, Seq("fp"), "left")
       .join(contam, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -448,7 +443,6 @@ object TextOps {
           .when(col("q") < 0.25, "quality")
           .otherwise("kept").as("stage"))
       .withColumn("kept", (col("stage") === "kept").cast("long"))
-    DedupOps.finishAndRelease(res, corpus)
   }
 
   /** q113's fingerprint-keeper election over gate-passing corpus rows —
@@ -471,18 +465,14 @@ object TextOps {
     * shuffle + one keyed join-back — strictly a subset of q113's plan.
     * `passers` is persisted for its two consumers (the election and the
     * join-back would otherwise each re-run the gate + md5 over every
-    * document — r14 review) and released after the returned frame
-    * materializes; the result follows the caller-owns-cache contract.
+    * document) and released after the returned, caller-owned frame fills.
     */
-  def textKeeperMap(docs: DataFrame): DataFrame = {
-    val passers = docs.filter(col("doc_id") >= 10)
+  def textKeeperMap(docs: DataFrame): DataFrame = Cached { c =>
+    val passers = c.hold(docs.filter(col("doc_id") >= 10)
       .filter(gopherKeepCol(col("text")))
-      .select(col("doc_id"), fingerprintCol(col("text")).as("fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    DedupOps.finishAndRelease(
-      passers.join(keeperElection(passers), "fp")
-        .select(col("doc_id"), col("keep_id")),
-      passers)
+      .select(col("doc_id"), fingerprintCol(col("text")).as("fp")))
+    passers.join(keeperElection(passers), "fp")
+      .select(col("doc_id"), col("keep_id"))
   }
 
   /** The keeper map as DuckDB SQL, factored from the q113 oracle's own
@@ -591,10 +581,9 @@ object TextOps {
     * shuffle and a row-local indexed filter. No pair joins, corpus-linear
     * throughout. Holds at 100 TB.
     */
-  def spanQualityPrune(docs: DataFrame): DataFrame = {
+  def spanQualityPrune(docs: DataFrame): DataFrame = Cached { c =>
     import org.apache.spark.sql.expressions.Window
-    val toks = docs.select(col("doc_id"), split(col("text"), " ").as("t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val toks = c.hold(docs.select(col("doc_id"), split(col("text"), " ").as("t")))
     val pos = toks.select(col("doc_id"), posexplode(col("t")))
       .select(col("doc_id"), (col("pos") + 1).as("i"), col("col").as("w"))
     val freq = pos.groupBy("w").agg(count(lit(1)).as("freq"))
@@ -614,7 +603,7 @@ object TextOps {
       .filter(col("cnt5") === 5 &&
         col("sum5") * col("ndoc") * 2 > col("sdoc") * 15)
       .groupBy("doc_id").agg(collect_set(col("i")).as("starts"))
-    val res = toks.join(starts, Seq("doc_id"), "left")
+    toks.join(starts, Seq("doc_id"), "left")
       .select(col("doc_id"),
         size(col("t")).cast("long").as("n_tokens"),
         when(col("starts").isNull, col("t")).otherwise(expr(
@@ -625,7 +614,6 @@ object TextOps {
       .select(col("doc_id"), col("n_tokens"),
         size(col("kt")).cast("long").as("n_kept"),
         concat_ws(" ", col("kt")).as("clean_text"))
-    DedupOps.finishAndRelease(res, toks)
   }
 
   /** q89's operator body: character-distribution Shannon entropy per
@@ -864,10 +852,8 @@ object TextOps {
     * [[mergesAsText]] to feed q96's applier — the learn→apply loop the
     * spec closes end-to-end.
     */
-  def bpeTrain(docs: DataFrame, nMerges: Int): Seq[(String, String, Long)] = {
-    val clean = docs.filter(!col("text").rlike("[\\n\\r]"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    clean.count()
+  def bpeTrain(docs: DataFrame, nMerges: Int): Seq[(String, String, Long)] = Cached.scope { c =>
+    val clean = c.hold(docs.filter(!col("text").rlike("[\\n\\r]")), fill = true)
     var merges = Vector.empty[(String, String, Long)]
     var exhausted = false
     while (merges.length < nMerges && !exhausted) {
@@ -878,7 +864,6 @@ object TextOps {
       else merges :+= ((best(0).getString(0), best(0).getString(1),
         best(0).getLong(2)))
     }
-    clean.unpersist(blocking = false)
     merges
   }
 

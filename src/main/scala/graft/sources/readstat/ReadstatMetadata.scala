@@ -57,7 +57,7 @@ object ReadstatMetadata {
         }.toSeq
       case "sas7bdat" =>
         val in = new java.io.BufferedInputStream(ReadstatIO.open(path), 1 << 20)
-        val meta = try sas.Sas.parseMetadata(in) finally in.close()
+        val meta = try sas.Sas.parseMetadata(in, ReadstatIO.fileSize(path)) finally in.close()
         meta.columns.zipWithIndex.map { case (c, i) =>
           ColumnMeta(path,
             s"sas7bdat ${if (meta.header.bit64) "64" else "32"}-bit",

@@ -249,7 +249,17 @@ object Sas {
     true
   }
 
-  def parseHeader(in: InputStream): Header = {
+  /** A header or page length is a raw u32 the reader allocates from, so
+    * it must be positive and fit in the file (`fileLen` bytes) — a
+    * damaged or hostile header ends in this named error, never an OOM.
+    */
+  private def boundedLength(what: String, n: Long, fileLen: Long): Int =
+    if (n <= 0 || n > fileLen || n > Int.MaxValue)
+      throw new IllegalArgumentException(
+        s"sas7bdat: $what length $n is outside the $fileLen-byte file")
+    else n.toInt
+
+  def parseHeader(in: InputStream, fileLen: Long): Header = {
     val first = new Array[Byte](288)
     require(readFully(in, first, 288), "sas7bdat: truncated header")
     require(java.util.Arrays.equals(
@@ -258,14 +268,14 @@ object Sas {
     val le = first(37) == 0x01.toByte
     val align1 = if (first(35) == '3'.toByte) 4 else 0
     val align2 = if (bit64) 4 else 0
-    val headerLength = Bin.u32(first, 196 + align1, le).toInt
+    val headerLength = boundedLength("header", Bin.u32(first, 196 + align1, le), fileLen)
     val full =
       if (headerLength > 288) {
         val rest = new Array[Byte](headerLength - 288)
         require(readFully(in, rest, rest.length), "sas7bdat: truncated header")
         first ++ rest
       } else first
-    val pageLength = Bin.u32(full, 200 + align1, le).toInt
+    val pageLength = boundedLength("page", Bin.u32(full, 200 + align1, le), fileLen)
     val pageCount = Bin.u32(full, 204 + align1, le)
     val release = {
       val off = 216 + align1 + align2
@@ -350,8 +360,8 @@ object Sas {
   }
 
   /** Scan metadata pages; mirrors the reference's MetadataBuilder. */
-  def parseMetadata(in: InputStream): Metadata = {
-    val h = parseHeader(in)
+  def parseMetadata(in: InputStream, fileLen: Long): Metadata = {
+    val h = parseHeader(in, fileLen)
     val le = h.littleEndian
     val page = new Array[Byte](h.pageLength)
     var compression: Compression = CNone

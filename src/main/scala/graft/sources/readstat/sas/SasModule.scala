@@ -47,7 +47,8 @@ object SasModule extends ReadstatFormats.FormatModule {
     if (cached != null) cached
     else {
       val in = new BufferedInputStream(ReadstatIO.open(path), 1 << 20)
-      val meta = try Sas.parseMetadata(in) finally in.close()
+      val len = if (key._2 >= 0) key._2 else ReadstatIO.fileSize(path)
+      val meta = try Sas.parseMetadata(in, len) finally in.close()
       metaCache.put(key, meta)
       meta
     }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{IvfPqIndexStore, MultimodalOps, TextOps}
+import graft.util.Cached
 import graft.util.Tables._
 
 /** MATERIALIZED CURATION-STAGE TABLES (r15, the r14 verdict's #3): q113's
@@ -77,24 +78,24 @@ object CurationStore {
     * corpus document: q113's stage, the doc's fingerprint, and whether
     * this doc is its fingerprint's elected keeper (the same election
     * [[TextOps.textKeeperMap]] computes; gate-failers have no text
-    * identity and are never keepers).
+    * identity and are never keepers). The two waterfall outputs it joins
+    * are adopted into the caller's scope `c`.
     */
-  private[graft] def batchTextLog(docs: DataFrame): (DataFrame, Seq[DataFrame]) = {
-    val stage = TextOps.pipelineWaterfall(docs)
-    val tk = TextOps.textKeeperMap(docs)
+  private[graft] def batchTextLog(c: Cached.Scope, docs: DataFrame): DataFrame = {
+    val stage = c.adopt(TextOps.pipelineWaterfall(docs))
+    val tk = c.adopt(TextOps.textKeeperMap(docs))
     val fp = docs.select(col("doc_id"),
       TextOps.fingerprintCol(col("text")).as("fp"))
-    val log = stage.select(col("doc_id"), col("stage"))
+    stage.select(col("doc_id"), col("stage"))
       .join(fp, "doc_id")
       .join(tk, Seq("doc_id"), "left")
       .select(col("doc_id"), col("fp"), col("stage"),
         coalesce(col("keep_id") === col("doc_id"), lit(false)).as("keeper"),
         // batch-built rows carry no epoch lineage (they are committed by
         // the build itself); streamed appends stamp theirs so the restart
-        // reseed can exclude a crashed epoch's un-ledgered rows (r15
-        // ADVICE — see [[committedKeeperFingerprints]])
+        // reseed can exclude a crashed epoch's un-ledgered rows (see
+        // [[committedKeeperFingerprints]])
         lit(null).cast("long").as("__epoch"))
-    (log, Seq(stage, tk))
   }
 
   /** Initialize the store from a standing corpus — the from-scratch
@@ -109,15 +110,20 @@ object CurationStore {
     * is mediaWaterfall's persisted output on the operator path).
     */
   def materializeFrom(docs: DataFrame, media: DataFrame, dir: String): Unit = {
-    val s = docs.sparkSession
-    val (log, upstream) = batchTextLog(docs)
-    try log.write.mode("overwrite").parquet(s"$dir/text_log")
-    finally upstream.foreach(_.unpersist(false))
-    try media.select("kind", "doc_id", "stage", "kept_id")
-      .write.mode("overwrite").parquet(s"$dir/media")
-    finally media.unpersist(false): Unit
-    IvfPqIndexStore.writeBuildId(s, dir)
+    writeStageTables(docs, media, dir)
+    IvfPqIndexStore.writeBuildId(docs.sparkSession, dir)
   }
+
+  /** The text log and media tables under `dir`; the text log's waterfall
+    * outputs are released after its write, `media` after its own.
+    */
+  private def writeStageTables(docs: DataFrame, media: DataFrame, dir: String): Unit =
+    Cached.scope { c =>
+      c.adopt(media)
+      Cached.scope(ct => batchTextLog(ct, docs).write.mode("overwrite").parquet(s"$dir/text_log"))
+      media.select("kind", "doc_id", "stage", "kept_id")
+        .write.mode("overwrite").parquet(s"$dir/media")
+    }
 
   /** The scheduled rebuild: stage a complete fresh set under
     * `index.v<k>`, fold the epoch ledger, commit with ONE atomic marker
@@ -137,12 +143,7 @@ object CurationStore {
       val vpath = new org.apache.hadoop.fs.Path(vdir)
       val fs = vpath.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (fs.exists(vpath)) fs.delete(vpath, true) // crashed-attempt leftover
-      val (log, upstream) = batchTextLog(docs)
-      try log.write.mode("overwrite").parquet(s"$vdir/text_log")
-      finally upstream.foreach(_.unpersist(false))
-      try media.select("kind", "doc_id", "stage", "kept_id")
-        .write.mode("overwrite").parquet(s"$vdir/media")
-      finally media.unpersist(false): Unit
+      writeStageTables(docs, media, vdir)
       IvfPqIndexStore.foldLedgerInto(s, cur, vdir)
       IvfPqIndexStore.writeBuildId(s, vdir)
       IvfPqIndexStore.commit(s, vdir)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.util.Cached
+
 /** Streaming DOCUMENT intake (EXT, sibling of [[EventStreams]]): the three
   * admission stages a continuously-fed training corpus runs on arrival —
   * canonical-fingerprint dedup, quality gating, per-source accounting. All
@@ -555,26 +557,23 @@ object DocStreams {
       evalBloom: Array[Byte], st: WaterfallState, qualityBar: Double,
       persistTo: Option[String], storeToken: Option[String],
       onCounts: (DataFrame, Long) => Unit,
-      onStaged: (DataFrame, Long) => Unit = (_, _) => ()): Unit = {
-    val staged = waterfallStageOf(batch, evalBloom, st.histBytes, qualityBar)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      onCounts(staged.groupBy("stage")
-        .agg(count(lit(1)).as("n_docs"))
-        .select(col("stage"), col("n_docs"),
-          when(col("stage") =!= "kept", col("n_docs")).otherwise(0L)
-            .as("dropped"),
-          when(col("stage") === "kept", col("n_docs")).otherwise(0L)
-            .as("passed")), epoch)
-      persistTo.foreach(dir =>
-        CurationStore.appendEpoch(staged, epoch, dir, storeToken): Unit)
-      onStaged(staged, epoch)
-      // the new keepers' fingerprints claim dedup state — AFTER the
-      // counts so a failure emits nothing half-updated, and AFTER every
-      // store append (see the crash-window note above); re-serialize
-      // only when the filter actually changed (r14 review: a ~MB-scale
-      // driver copy per trigger is pure waste on keeper-less triggers)
-      st.absorb(staged.filter(col("keeper")).select("fp").collect())
-    } finally staged.unpersist(blocking = false): Unit
+      onStaged: (DataFrame, Long) => Unit = (_, _) => ()): Unit = Cached.scope { c =>
+    val staged = c.hold(waterfallStageOf(batch, evalBloom, st.histBytes, qualityBar))
+    onCounts(staged.groupBy("stage")
+      .agg(count(lit(1)).as("n_docs"))
+      .select(col("stage"), col("n_docs"),
+        when(col("stage") =!= "kept", col("n_docs")).otherwise(0L)
+          .as("dropped"),
+        when(col("stage") === "kept", col("n_docs")).otherwise(0L)
+          .as("passed")), epoch)
+    persistTo.foreach(dir =>
+      CurationStore.appendEpoch(staged, epoch, dir, storeToken): Unit)
+    onStaged(staged, epoch)
+    // the new keepers' fingerprints claim dedup state — AFTER the
+    // counts so a failure emits nothing half-updated, and AFTER every
+    // store append (see the crash-window note above); re-serialize
+    // only when the filter actually changed (a ~MB-scale driver copy
+    // per trigger is pure waste on keeper-less triggers)
+    st.absorb(staged.filter(col("keeper")).select("fp").collect())
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.{IvfPqIndexStore, SimilarityOps}
+import graft.util.Cached
 
 /** STREAMING IVF-PQ index maintenance: the serve/append/audit leg of the
   * index lifecycle — build once (q122), serve (q122's saved search),
@@ -115,8 +116,8 @@ object IndexMaintenance {
       nProbes: Int = 2)(
       onAdmitted: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     vecs.writeStream.foreachBatch { (batch: DataFrame, epoch: Long) =>
-      val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      Cached.scope { c =>
+        val b = c.hold(batch)
         val dup = SimilarityOps.searchSavedIvfPqFor(
             b.select(col("vec_id").as("qid"),
               expr("CAST(e AS ARRAY<DOUBLE>)").as("qe")),
@@ -124,7 +125,7 @@ object IndexMaintenance {
           .filter(col("adist") <= bar)
           .select(col("qid").as("vec_id"))
         onAdmitted(b.join(dup, Seq("vec_id"), "left_anti"), epoch)
-      } finally b.unpersist(blocking = false): Unit
+      }
     }
 
   /** VECTOR-HEALTH ADMISSION GATE (r14, q140's verdict at the ingest

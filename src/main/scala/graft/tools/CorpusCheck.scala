@@ -3,6 +3,7 @@ package graft.tools
 import java.io.File
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.types.StructType
 
@@ -47,7 +48,7 @@ object CorpusCheck {
         (meta.header.rowCount.toLong, meta.variables.length)
       case "sas7bdat" =>
         val in = new java.io.BufferedInputStream(ReadstatIO.open(path), 1 << 20)
-        val meta = try sas.Sas.parseMetadata(in) finally in.close()
+        val meta = try sas.Sas.parseMetadata(in, ReadstatIO.fileSize(path)) finally in.close()
         (meta.rowCount, meta.columns.length)
     }
   }
@@ -94,7 +95,7 @@ object CorpusCheck {
         else if (!rowsOk) s"rows $total/$expRows tail $tail/${expRows - half}"
         else s"cols ${schema.length}/$expCols")
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         Result(path, ok = false, -1, -1, -1, -1, s"${e.getClass.getSimpleName}: ${e.getMessage}")
     }
   }

@@ -10,7 +10,7 @@ package graft.tools
   * Runs at sf0.001 on local[4] like PlanDump — plan SHAPE (exchanges,
   * join strategies, pushdown) is scale-invariant for these queries; the
   * bench carries the timing evidence. NOTE: building a query frame runs
-  * the operators' internal finishAndRelease materializations, so the
+  * the operators' internal `graft.util.Cached` fills, so the
   * "snapshot" executes each query eagerly at sf0.001 — cheap, but not
   * free. Output is anchored at the repo root (the nearest ancestor of
   * the cwd containing build.sbt — r16 ADVICE: a cwd-relative path

@@ -2,9 +2,9 @@ package graft.operators
 
 import graft.SparkSpec
 
-/** The DedupOps cache contract (r6/r7 ADVICE): operators may persist
-  * corpus-sized intermediates, but none may outlive the call — only the
-  * output-sized RETURNED frame stays cached, and the caller can actually
+/** The operators' cache contract ([[graft.util.Cached]]): operators may
+  * persist corpus-sized intermediates, but none may outlive the call — only
+  * the output-sized RETURNED frame stays cached, and the caller can actually
   * release it with a plain `result.unpersist()` (which requires the returned
   * Dataset's own plan to be the cached plan — persisting a sub-plan under a
   * trailing orderBy makes unpersist a silent no-op in the CacheManager).
@@ -19,7 +19,9 @@ class CacheReleaseSpec extends SparkSpec {
   for (q <- Seq("q34_ngram_jaccard", "q35_minhash_lsh", "q36_simhash",
       "q40_lsh_jaccard_verified", "q45_dedup_clusters", "q49_minhash_estimate",
       "q62_embedding_clusters", "q65_cluster_reps", "q66_pq_adc_topk",
-      "q125_media_waterfall")) {
+      "q70_ivfpq_topk", "q71_window_dedup", "q73_dedup_disposition",
+      "q97_train_quality", "q102_auc_eval", "q113_pipeline_waterfall",
+      "q116_span_quality_prune", "q125_media_waterfall")) {
     test(s"$q leaves only its (caller-owned, releasable) output cached") {
       spark.catalog.clearCache()
       val before = persistedIds

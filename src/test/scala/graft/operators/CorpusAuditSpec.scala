@@ -316,7 +316,7 @@ class CorpusAuditSpec extends SparkSpec {
     sp.catalog.clearCache()
   }
 
-  test("q95 releases every internal cache (wins/cand/sharr — the finishAndRelease contract)") {
+  test("q95 releases every internal cache (wins/cand/sharr — the Cached scope contract)") {
     val sp = spark
     import sp.implicits._
     val text = (0 until 30).map(i => s"c$i").mkString(" ")
@@ -335,7 +335,7 @@ class CorpusAuditSpec extends SparkSpec {
     assert((sp.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
   }
 
-  test("q90 releases its gram cache (finishAndRelease contract)") {
+  test("q90 releases its gram cache (Cached scope contract)") {
     val docs = docsDf(Seq(
       (1L, (0 until 10).map(i => s"w$i").mkString(" "), "a"),
       (2L, (0 until 10).map(i => s"w$i").mkString(" "), "b")))

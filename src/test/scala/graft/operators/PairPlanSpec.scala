@@ -21,7 +21,7 @@ class PairPlanSpec extends SparkSpec {
     // lookups, which must stay hash joins (a Cartesian/BNLJ would mean
     // the jaccard join conditions stopped being equi, or the pair stage
     // regressed to a corpus-table self-join). Its queries entry
-    // materializes eagerly (finishAndRelease), so the interesting plans
+    // fills eagerly (graft.util.Cached), so the interesting plans
     // are the ones CAPTURED during that materialization: snapshot
     // executed plans via a listener instead of reading the post-cache
     // frame (whose plan is just the InMemoryRelation). The same capture
@@ -184,10 +184,9 @@ class PairPlanSpec extends SparkSpec {
       .toDF("doc_id", "simhash")
     val far = Seq((900010L, 56L), (900011L, 56L)) // 7 xor 56 = 63 → dist 6, excluded
       .toDF("doc_id", "simhash")
-    // finish=false: the raw pair frame keeps the join structure visible in
-    // executedPlan (the persisted path collapses to InMemoryTableScan)
-    val pairs = DedupOps.simhashPairs(hot.unionByName(near).unionByName(far),
-      finish = false)
+    // the raw pair frame keeps the join structure visible in executedPlan
+    // (the persisted path collapses to InMemoryTableScan)
+    val pairs = DedupOps.simhashPairFrame(hot.unionByName(near).unionByName(far))
     val plan = pairs.queryExecution.executedPlan.toString
     assert(!plan.contains("collect_list"), "q36 pair plan rebuilt an id array")
     assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"))

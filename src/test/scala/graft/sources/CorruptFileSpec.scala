@@ -67,6 +67,41 @@ class CorruptFileSpec extends SparkSpec {
       s"expected a zsav/EOF error, got: ${msgs(e)}")
   }
 
+  test("sas header declaring a length past the file is a named error, not an OOM") {
+    // 288 bytes: the magic, little-endian, 32-bit alignment, and a header
+    // length of 0x7FFFFFF0 at offset 196 — the reader would allocate ~2 GB
+    val bytes = java.util.Arrays.copyOf(
+      graft.sources.readstat.sas.Sas.Magic, 288)
+    bytes(37) = 0x01
+    java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putInt(196, 0x7FFFFFF0)
+    val dir = Files.createTempDirectory("graft_corrupt_sas")
+    val bad = dir.resolve("bad.sas7bdat")
+    Files.write(bad, bytes)
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
+    val e = intercept[Exception] {
+      spark.read.format("readstat").load(bad.toString).collect()
+    }
+    assert(msgs(e).exists(_.contains("sas7bdat: header length 2147483632")),
+      s"expected the named header-length error, got: ${msgs(e)}")
+
+    // PERMISSIVE: the bad file is quarantined with a record, a good
+    // neighbour still arrives whole
+    spark.range(100).select(col("id").cast("double").as("x")).coalesce(1)
+      .write.format("readstat").mode("overwrite")
+      .save(dir.resolve("good.sas7bdat").toString)
+    val badDir = Files.createTempDirectory("graft_badfiles_sas").toString
+    val xs = spark.read.format("readstat")
+      .option("mode", "PERMISSIVE").option("badFilesPath", badDir)
+      .load(dir.toString).select("x").collect().map(_.getDouble(0)).sorted
+    assert(xs.toSeq === (0 until 100).map(_.toDouble))
+    val body = Option(new java.io.File(badDir).listFiles()).getOrElse(Array.empty)
+      .map(f => new String(Files.readAllBytes(f.toPath), "UTF-8")).mkString
+    assert(body.contains(bad.toString) && body.contains("sas7bdat: header length"),
+      s"expected a quarantine record for the bad file, got: $body")
+  }
+
   test("header-corrupt file fails fast with a format error") {
     val p = tmp("garbage.dta")
     Files.write(Paths.get(p), Array.fill[Byte](4096)(0x5A))
